@@ -8,6 +8,15 @@
 #   --test     additionally runs the full scalatest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# Layout guard: every at-rest table's bucket/sort/save decision lives in
+# sources/Warehouse.scala (one Layout value per family), so no other
+# main source may call bucketBy or saveAsTable.
+if stray=$(grep -rnE '\.(bucketBy|saveAsTable)\(' src/main/scala \
+    | grep -v '^src/main/scala/graft/sources/Warehouse\.scala:'); then
+  echo "precommit: bucketBy/saveAsTable outside sources/Warehouse.scala:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test

@@ -68,7 +68,7 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
       // ingest runs LAST, after the whole query board: the heap is full
       // of 100+ queries' session state and an un-collected old gen —
-      // standalone the same flatten measures ~2× faster (FpProfile
+      // standalone the same flatten measures ~2× faster (SCALE.md §12:
       // 247 k eps vs 128 k in-bench, round 10). Collect once before
       // timing and take best-of-three so the reading reflects the
       // operator, not the board's garbage.

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
-import graft.sources.Warehouse
+import graft.sources.{Layout, Side, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -274,12 +274,11 @@ object ScaleBench {
         val ent = expr("cast(value * 100 as long) % 100000")
         def parts(df: DataFrame) = graft.operators.Rollup
           .distinctPartials(df, col("day"), col("event_type"), ent)
-        Warehouse.saveRollup(parts(scaleEvents(spark, sf, k)), tbl)
+        Warehouse.save(Layout.Rollup, tbl, parts(scaleEvents(spark, sf, k)))
         val batch = scaleEvents(spark, sf, 1).persist()
         batch.count()
         record("rollup_distinct", k, timeUnit {
-          Warehouse.saveRollup(parts(batch), tbl,
-            mode = org.apache.spark.sql.SaveMode.Append)
+          Warehouse.append(Layout.Rollup, tbl, parts(batch))
           graft.operators.Rollup.estimateDistinct(spark.table(tbl))
             .write.format("noop").mode("overwrite").save()
         })
@@ -840,25 +839,23 @@ object ScaleBench {
       // the per-cell row count (≈ linear with a bucket-pruned constant)
       if (want("filtered_probe")) {
         val tbl = "graft_bench_scale_fivf"
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_centroids")
+        Warehouse.drop(spark, Layout.Ivf, tbl)
         val emb = scaleEmb(spark, sf, k).repartition(32).persist()
         val nE = emb.count()
         System.err.println(s"SCALE inputs ${k}x: $nE embeddings (fivf)")
         val (cells, centroids) = graft.operators.Similarity.ivfIndex(
           emb, "vec_id", "embedding", nlist = 16)
-        Warehouse.saveIvfIndex(cells, centroids, tbl)
+        Warehouse.save(Layout.Ivf, tbl, cells, centroids)
         val evens = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
           .select(col("vec_id").as("id"))
         record("filtered_probe", k, time(
           graft.operators.Similarity.ivfCosineTopKFrom(
             spark.table(tbl).join(evens, "id"),
-            spark.table(s"${tbl}_centroids"),
+            spark.table(Warehouse.sideTable(tbl, Side.Centroids)),
             emb.filter(col("vec_id") < 5), "vec_id", "embedding",
             k = 3, nprobe = 12)))
         emb.unpersist()
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_centroids")
+        Warehouse.drop(spark, Layout.Ivf, tbl)
       }
 
       // MaxSim late-interaction scan at k× corpus: 3 fixed probes, all
@@ -988,9 +985,9 @@ object ScaleBench {
       if (want("matryoshka_stored")) {
         val tbl = "graft_bench_scale_mrl"
         Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.saveEmbeddingsWithPrefix(
-          scaleEmb(spark, sf, k).repartition(32),
-          "vec_id", "embedding", 16, tbl)
+        Warehouse.save(Layout.Plain, tbl,
+          Similarity.withPrefix(scaleEmb(spark, sf, k).repartition(32),
+            "vec_id", "embedding", 16))
         val stored = spark.table(tbl)
         val nS = stored.count()
         System.err.println(s"SCALE inputs ${k}x: $nS stored vectors (mrl)")
@@ -1028,12 +1025,11 @@ object ScaleBench {
       // stays constant
       if (want("nb_probe")) {
         val tbl = "graft_bench_scale_nbmodel"
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_labels")
+        Warehouse.drop(spark, Layout.NaiveBayes, tbl)
         val docs1 = spark.read.parquet(s"$sf/documents.parquet")
         val (c1, l1) = graft.operators.TextAnalysis.naiveBayesFit(
           docs1.filter(col("doc_id") % 2 === 0), "doc_id", "text", "lang")
-        Warehouse.saveNbModel(c1, l1, tbl)
+        Warehouse.save(Layout.NaiveBayes, tbl, c1, l1)
         // replicate WITHOUT token salting: scaleDocs' salted replicas
         // would be ~all-OOV against the fixed 1× vocabulary and the
         // post-join work would shrink artificially; identical-text
@@ -1051,9 +1047,7 @@ object ScaleBench {
           graft.operators.TextAnalysis.naiveBayesScoreStored(
             spark, tbl, test, "doc_id", "text", "lang")))
         test.unpersist()
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_labels")
-        Warehouse.dropWithLocation(spark, s"${tbl}_params")
+        Warehouse.drop(spark, Layout.NaiveBayes, tbl)
       }
 
       // Stored-trigram-index probe at k× the corpus (q225b's scale
@@ -1070,9 +1064,8 @@ object ScaleBench {
         val docs = scaleDocs(spark, sf, k).repartition(32).persist()
         val nD = docs.count()
         System.err.println(s"SCALE inputs ${k}x: $nD docs (trigram)")
-        Warehouse.saveTrigramIndex(
-          graft.operators.Search.trigramPostings(docs, "doc_id", "text"),
-          tbl)
+        Warehouse.save(Layout.Trigram, tbl,
+          graft.operators.Search.trigramPostings(docs, "doc_id", "text"))
         record("trigram_probe", k, time(
           graft.operators.Search.substringSearch(spark.table(tbl), docs,
             "doc_id", "text", "scan slow")))
@@ -1140,9 +1133,9 @@ object ScaleBench {
       if (want("phrase_probe")) {
         val tbl = "graft_bench_scale_positional"
         Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.saveInvertedIndex(
+        Warehouse.save(Layout.Inverted, tbl,
           graft.operators.Search.positionalPostings(
-            scaleDocs(spark, sf, k), "doc_id", "text"), tbl)
+            scaleDocs(spark, sf, k), "doc_id", "text"))
         record("phrase_probe", k, time(
           graft.operators.Search.phraseDocsFrom(spark.table(tbl),
             "slow query")))
@@ -1233,7 +1226,7 @@ object ScaleBench {
           .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= 200L).select("fp_hash")
-        Warehouse.saveWinnowIndex(sel.join(rare, "fp_hash"), tbl)
+        Warehouse.save(Layout.Winnow, tbl, sel.join(rare, "fp_hash"))
         val probe = scaleDocs(spark, sf, 1)
           .select((col("doc_id") + 900000000L).as("doc_id"), col("text"))
         record("winnow_probe", k, time(
@@ -1364,9 +1357,8 @@ object ScaleBench {
       if (want("admit_batch")) {
         val tbl = "graft_bench_scale_admit"
         Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.saveSimHashIndex(
-          Dedup.simHashBandFrame(docs, "doc_id", split(col("text"), " ")),
-          tbl)
+        Warehouse.save(Layout.SimHash, tbl,
+          Dedup.simHashBandFrame(docs, "doc_id", split(col("text"), " ")))
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-admit").toString + "/out"
         def freshBatch(tag: Int): DataFrame = scaleDocs(spark, sf, 1)
@@ -1418,9 +1410,9 @@ object ScaleBench {
         Warehouse.dropWithLocation(spark, tbl)
         // repartition before the gram explode (the trigram_probe lesson:
         // the crossJoin-synthesized corpus streams through ~1 partition)
-        Warehouse.saveTrigramIndex(
+        Warehouse.save(Layout.Trigram, tbl,
           graft.operators.Search.trigramPostings(
-            docs.repartition(32), "doc_id", "text"), tbl)
+            docs.repartition(32), "doc_id", "text"))
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-tri-admit").toString + "/out"
         def freshTriBatch(tag: Int): DataFrame = scaleDocs(spark, sf, 1)
@@ -1453,7 +1445,7 @@ object ScaleBench {
         val idxRare = idxSel.groupBy("fp_hash")
           .agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= 200L).select("fp_hash")
-        Warehouse.saveWinnowIndex(idxSel.join(idxRare, "fp_hash"), tbl)
+        Warehouse.save(Layout.Winnow, tbl, idxSel.join(idxRare, "fp_hash"))
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-wn-admit").toString + "/out"
         def freshWnBatch(tag: Int): DataFrame = scaleDocs(spark, sf, 1)
@@ -1488,13 +1480,13 @@ object ScaleBench {
           .groupBy("reg_domain").agg(count(lit(1)).as("n"))
         // k stamped partials = k past batches: the merge-on-read input
         // the admission pays grows k× while the batch stays 1× (seeds
-        // stamped NEGATIVE per the saveDomainCounts namespace contract
+        // stamped NEGATIVE per the Layout.DomainCounts stamp contract
         // — non-negative stamps belong to admission rounds)
         val standing = perDomain
           .crossJoin(spark.range(k).toDF("_i"))
           .withColumn("batch_id", -col("_i") - 1)
           .drop("_i")
-        Warehouse.saveDomainCounts(standing, tbl)
+        Warehouse.save(Layout.DomainCounts, tbl, standing)
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-dom-admit").toString + "/out"
         def freshDomBatch(tag: Int): DataFrame = scaleDocs(spark, sf, 1)
@@ -1559,10 +1551,10 @@ object ScaleBench {
         Warehouse.dropWithLocation(spark, tbl)
         val urlOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
           id => graft.operators.Url.syntheticUrl(id, lit("en"))
-        Warehouse.saveUrlKeyIndex(
+        Warehouse.save(Layout.UrlKeys, tbl,
           scaleDocs(spark, sf, k).select(col("doc_id"),
             graft.operators.Url.canonicalizeUrlExt(urlOf(col("doc_id")))
-              .as("url_key")), tbl)
+              .as("url_key")))
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-url-admit").toString + "/out"
         def onceUrl(tag: Int): Double = {
@@ -1580,11 +1572,10 @@ object ScaleBench {
 
       if (want("minhash_admit")) {
         val tbl = "graft_bench_scale_mh_admit"
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_shingles")
+        Warehouse.drop(spark, Layout.minHash(), tbl)
         val idxSh = Dedup.shingles(docs, "doc_id", "text", 3).persist()
-        try Warehouse.saveMinHashIndex(
-          Dedup.minHashBandFrameFromShingles(idxSh, "doc_id"), idxSh, tbl)
+        try Warehouse.save(Layout.minHash(), tbl,
+          Dedup.minHashBandFrameFromShingles(idxSh, "doc_id"), idxSh)
         finally idxSh.unpersist()
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-mh-admit").toString + "/out"
@@ -1600,8 +1591,7 @@ object ScaleBench {
           (System.nanoTime() - t0) / 1e9
         }
         record("minhash_admit", k, math.min(onceMh(1), onceMh(2)))
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_shingles")
+        Warehouse.drop(spark, Layout.minHash(), tbl)
       }
       // Lexical-cosine admission at scale (minhash_admit's cosine twin):
       // the standing capped-tf index grows k×, the probed batch stays a
@@ -1610,17 +1600,17 @@ object ScaleBench {
       // track the batch's matching postings, not the corpus
       if (want("lexical_admit")) {
         val tbl = "graft_bench_scale_lexical"
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_norms")
+        Warehouse.drop(spark, Layout.Lexical, tbl)
         val corpusTf = Dedup.cappedLexicalTf(docs, "doc_id", "text", 400L)
-        Warehouse.saveLexicalIndex(corpusTf, Dedup.lexicalNorms(corpusTf), tbl)
+        Warehouse.save(Layout.Lexical, tbl, corpusTf,
+          Dedup.lexicalNorms(corpusTf))
         val batch = scaleDocs(spark, sf, 1)
           .select((col("doc_id") + 900000000L).as("doc_id"), col("text"))
         record("lexical_admit", k, time(
           Dedup.lexicalCosineAgainst(batch, "doc_id", "text",
-            spark.table(tbl), spark.table(s"${tbl}_norms"), 0.8)))
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_norms")
+            spark.table(tbl),
+            spark.table(Warehouse.sideTable(tbl, Side.Norms)), 0.8)))
+        Warehouse.drop(spark, Layout.Lexical, tbl)
       }
       // incremental closure maintenance (q220): standing cluster table
       // from the k× pair graph, a FIXED 1×-sized delta (bridging new
@@ -1649,10 +1639,12 @@ object ScaleBench {
       if (want("ivfpq_nlist")) {
         val nl = Similarity.nlistFor(nEmb)
         val tbl = "graft_bench_scale_ivfpqn"
+        def cents = spark.table(Warehouse.sideTable(tbl, Side.Centroids))
+        def codebk = spark.table(Warehouse.sideTable(tbl, Side.Codebook))
         val (codes, centroids, codebook) = Similarity.ivfPqIndex(
           emb.repartition(64), "vec_id", "embedding", nlist = nl,
           subspaces = 16)
-        Warehouse.saveIvfPqIndex(codes, centroids, codebook, tbl)
+        Warehouse.save(Layout.IvfPq, tbl, codes, centroids, codebook)
         val probes = emb.filter(col("vec_id") < 5)
         val exact = Similarity.knnBatch(emb, probes, "vec_id", "embedding", k = 3)
           .select("probe_id", "nn_id").collect()
@@ -1663,15 +1655,13 @@ object ScaleBench {
         val np = Similarity.nprobeFor(nEmb, nl)
         System.err.println(s"SCALE ivfpq_nlist ${k}x: nlist=$nl nprobe=$np")
         def got(): Set[(Long, Long)] = Similarity.ivfPqTopKFrom(
-            spark.table(tbl), spark.table(s"${tbl}_centroids"),
-            spark.table(s"${tbl}_codebook"), emb, probes,
+            spark.table(tbl), cents, codebk, emb, probes,
             "vec_id", "embedding", k = 3, nprobe = np, candidates = 150,
             subspaces = 16)
           .select("probe_id", "nn_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         record("ivfpq_nlist", k, time(Similarity.ivfPqTopKFrom(
-          spark.table(tbl), spark.table(s"${tbl}_centroids"),
-          spark.table(s"${tbl}_codebook"), emb, probes,
+          spark.table(tbl), cents, codebk, emb, probes,
           "vec_id", "embedding", k = 3, nprobe = np, candidates = 150,
           subspaces = 16)))
         recordRecall("ivfpq_nlist", k, nl, (exact & got()).size / 15.0)
@@ -1683,8 +1673,7 @@ object ScaleBench {
           grid.split(",").foreach { pair =>
             val Array(gNp, gCand) = pair.split(":").map(_.trim.toInt)
             val g = Similarity.ivfPqTopKFrom(
-                spark.table(tbl), spark.table(s"${tbl}_centroids"),
-                spark.table(s"${tbl}_codebook"), emb, probes,
+                spark.table(tbl), cents, codebk, emb, probes,
                 "vec_id", "embedding", k = 3, nprobe = gNp,
                 candidates = gCand, subspaces = 16)
               .select("probe_id", "nn_id").collect()
@@ -1693,9 +1682,7 @@ object ScaleBench {
               (exact & g).size / 15.0)
           }
         }
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_centroids")
-        Warehouse.dropWithLocation(spark, s"${tbl}_codebook")
+        Warehouse.drop(spark, Layout.IvfPq, tbl)
       }
 
       // semantic admission (the quartet's fourth member): standing
@@ -1707,8 +1694,8 @@ object ScaleBench {
       if (want("semantic_admit")) {
         val tbl = "graft_bench_scale_semantic"
         Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.saveAnnIndex(Similarity.annBucketFrame(
-          emb.repartition(64), "vec_id", "embedding"), tbl, buckets = 16)
+        Warehouse.save(Layout.Ann.copy(floor = 16), tbl,
+          Similarity.annBucketFrame(emb.repartition(64), "vec_id", "embedding"))
         val outDir = java.nio.file.Files
           .createTempDirectory("graft-scale-sem").toString + "/out"
         var round = 0
@@ -1795,24 +1782,24 @@ object ScaleBench {
         if (want("ivf_append")) {
           val (cells, centroids) =
             Similarity.ivfIndex(emb, "vec_id", "embedding")
-          Warehouse.saveIvfIndex(cells, centroids, "graft_bench_scale_ivf")
-          val storedCentroids = spark.table("graft_bench_scale_ivf_centroids")
+          Warehouse.save(Layout.Ivf, "graft_bench_scale_ivf", cells, centroids)
+          val storedCentroids = spark.table(
+            Warehouse.sideTable("graft_bench_scale_ivf", Side.Centroids))
           record("ivf_append", k, timeUnit(
-            Warehouse.appendIvfIndex(
+            Warehouse.append(Layout.Ivf, "graft_bench_scale_ivf",
               Similarity.ivfAssign(batch, "vec_id", "embedding",
-                storedCentroids).select("id", "emb", "cell"),
-              "graft_bench_scale_ivf")))
+                storedCentroids).select("id", "emb", "cell"))))
         }
         if (want("pq_append")) {
           val (codes, codebook) =
             Similarity.pqIndex(emb, "vec_id", "embedding")
-          Warehouse.savePqIndex(codes, codebook, "graft_bench_scale_pq")
-          val storedCodebook = spark.table("graft_bench_scale_pq_codebook")
+          Warehouse.save(Layout.Pq, "graft_bench_scale_pq", codes, codebook)
+          val storedCodebook = spark.table(
+            Warehouse.sideTable("graft_bench_scale_pq", Side.Codebook))
           record("pq_append", k, timeUnit(
-            Warehouse.appendPqIndex(
+            Warehouse.append(Layout.Pq, "graft_bench_scale_pq",
               Similarity.pqEncode(batch, "vec_id", "embedding",
-                storedCodebook),
-              "graft_bench_scale_pq")))
+                storedCodebook))))
         }
         batch.unpersist()
       }
@@ -1832,6 +1819,8 @@ object ScaleBench {
       // pruned-linear regime the cell bucketing buys
       if (want("ivfpq_append") || want("ivfpq_probe")) {
         val tbl = "graft_bench_scale_ivfpq"
+        def cents = spark.table(Warehouse.sideTable(tbl, Side.Centroids))
+        def codebk = spark.table(Warehouse.sideTable(tbl, Side.Codebook))
         // untimed build: spread the encode scan — the synthetic
         // crossJoin corpus inherits the base parquet's ONE partition,
         // which serializes a 32M-row encode that real multi-file
@@ -1839,30 +1828,27 @@ object ScaleBench {
         // repartition cannot change it)
         val (codes, centroids, codebook) = Similarity.ivfPqIndex(
           emb.repartition(64), "vec_id", "embedding", subspaces = 16)
-        Warehouse.saveIvfPqIndex(codes, centroids, codebook, tbl)
+        Warehouse.save(Layout.IvfPq, tbl, codes, centroids, codebook)
         if (want("ivfpq_append")) {
           val batch = scaleEmb(spark, sf, 1)
             .select((col("vec_id") + 900000000L).as("vec_id"),
               col("embedding")).persist()
           batch.count()
           record("ivfpq_append", k, timeUnit(
-            Warehouse.appendIvfPqIndex(
+            Warehouse.append(Layout.IvfPq, tbl,
               Similarity.ivfPqEncode(batch, "vec_id", "embedding",
-                spark.table(s"${tbl}_centroids"),
-                spark.table(s"${tbl}_codebook"), subspaces = 16), tbl)))
+                cents, codebk, subspaces = 16))))
           batch.unpersist()
         }
         if (want("ivfpq_probe")) {
           val probes = emb.filter(col("vec_id") < 5)
           record("ivfpq_probe", k, time(
             Similarity.ivfPqTopKFrom(spark.table(tbl),
-              spark.table(s"${tbl}_centroids"), spark.table(s"${tbl}_codebook"),
+              cents, codebk,
               emb, probes, "vec_id", "embedding", k = 3, nprobe = 12,
               candidates = 150, subspaces = 16)))
         }
-        Warehouse.dropWithLocation(spark, tbl)
-        Warehouse.dropWithLocation(spark, s"${tbl}_centroids")
-        Warehouse.dropWithLocation(spark, s"${tbl}_codebook")
+        Warehouse.drop(spark, Layout.IvfPq, tbl)
       }
       docs.unpersist(); emb.unpersist()
       }

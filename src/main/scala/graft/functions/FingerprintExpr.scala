@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * Native Catalyst expression for the slow-log fingerprint — the
  * codegen'd replacement for `SlowLogTable.fingerprintUdf`, adopted when
  * the SURVEY §7.4 ingest profile measured the UDF at 31% of ingest wall
- * time ([[graft.FpProfile]]; the ledger's lift threshold was 30%). The
+ * time (SCALE.md §9; the ledger's lift threshold was 30%). The
  * normalization itself is the same
  * [[graft.slowlog.Fingerprint.fingerprint]] scalar (pure JVM, regex-free
  * hot path); what the Expression removes is the ScalaUDF boundary —

@@ -159,7 +159,7 @@ object Bpe {
   /**
    * Apply a STORED rank-ordered merge table to a NEW corpus — the
    * serving half of the tokenizer model at rest
-   * ([[graft.sources.Warehouse.saveBpeMerges]]): the merge list
+   * ([[graft.sources.Layout.Plain]]): the merge list
    * collects (numMerges rows, bounded by construction) and compiles
    * into ONE chained-replace projection, so held-out tokenization is a
    * single map-only scan over the per-(group, word) counts — no

@@ -166,7 +166,7 @@ object Dedup {
    * Cross-corpus winnowing probe — which probe docs share at least
    * `minShared` selected fingerprint hashes with some indexed doc?
    * The incremental MOSS shape over the at-rest index
-   * ([[graft.sources.Warehouse.saveWinnowIndex]]): both sides are
+   * ([[graft.sources.Layout.Winnow]]): both sides are
    * `(id, fp_hash)` selections; the join blocks on the hash, with the
    * stored side pre-distributed on it (bucketBy — only the probe side
    * shuffles). Output: `(probe_id, match_id, n_shared)`.
@@ -426,7 +426,7 @@ object Dedup {
    * persistable MinHash-LSH index, the Jaccard twin of
    * [[simHashBandFrame]]. At rest, write it (together with the shingle
    * frame the exact-Jaccard verification needs) via
-   * [[graft.sources.Warehouse.saveMinHashIndex]] (`bucketBy(key)`): a
+   * [[graft.sources.Layout.minHash]] (`bucketBy(key)`): a
    * probe document's band keys become a bucket-pruned lookup instead of
    * re-signing the corpus, and the banded self-join reads both sides
    * already hash-distributed on `key`. The signature model is stateless
@@ -521,7 +521,7 @@ object Dedup {
   /**
    * Fuzzy-dedup pairs over an already-built MinHash index — the stored
    * half of [[minHashDedupPairs]]: `bandFrame` and `shingleFrame` come
-   * back from [[graft.sources.Warehouse.saveMinHashIndex]]'s two tables
+   * back from [[graft.sources.Layout.minHash]]'s two tables
    * (or are fresh frames — the result is identical either way, which is
    * what the WarehouseSpec equality proves). The banded self-join reads
    * a `bucketBy(key)` table pre-distributed on its join key; the exact
@@ -1044,7 +1044,7 @@ object Dedup {
   /**
    * Banded fingerprint frame `(idCol, sh, band, key)` — the persistable
    * SimHash index. At rest, write it via
-   * [[graft.sources.Warehouse.saveSimHashIndex]] (`bucketBy(key)`): a
+   * [[graft.sources.Layout.SimHash]] (`bucketBy(key)`): a
    * probe's band keys become a bucket-pruned lookup instead of
    * re-fingerprinting the corpus, and the banded self-join reads both
    * sides co-partitioned on `key` — no exchange (at 100 TB you index
@@ -1093,7 +1093,7 @@ object Dedup {
    * (`idCol`), distinct.
    *
    * Scale shape: with the index stored `bucketBy(key)`
-   * ([[graft.sources.Warehouse.saveSimHashIndex]]) the join reads only
+   * ([[graft.sources.Layout.SimHash]]) the join reads only
    * the probe batch's buckets and arrives pre-distributed on the join
    * key — the probe side is the small side and broadcasts under AQE.
    * Cost ∝ batch, not corpus (the same property BENCH_SCALED measured
@@ -1341,7 +1341,7 @@ object Dedup {
    * own unmatchable noise). Emits `(probe_id, corpus_id, sim)`.
    *
    * At rest, `indexTf` is the token-bucketed table
-   * [[graft.sources.Warehouse.saveLexicalIndex]] writes, so the
+   * [[graft.sources.Layout.Lexical]] writes, so the
    * candidate join shuffles ONLY the batch-sized probe side — the
    * stored side is already hashed on `tok`.
    */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{Layout, Side, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -769,7 +770,7 @@ object ExtQueries {
 
     // MinHash-LSH fuzzy dedup THROUGH the at-rest index (the q75
     // pattern, closing round 10's one missing index family): bands +
-    // shingles are persisted bucketed (Warehouse.saveMinHashIndex) and
+    // shingles are persisted bucketed (Layout.minHash) and
     // the banded self-join + exact-Jaccard verify consume the STORED
     // tables — the band join reads both sides pre-distributed on `key`,
     // and future probes (q40b) never re-sign the corpus. Output (and
@@ -780,14 +781,14 @@ object ExtQueries {
       // persisted frame; the two saveAsTable actions would otherwise
       // each re-shingle the corpus)
       val sh = Dedup.shingles(docs, "doc_id", "text", n = 3).persist()
-      try graft.sources.Warehouse.saveMinHashIndex(
-        Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh,
-        "graft_bench_minhash_q40")
+      try Warehouse.save(Layout.minHash(), "graft_bench_minhash_q40",
+        Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh)
       finally sh.unpersist()
       storedIndexOwner.put("graft_bench_minhash_q40", d)
       Dedup.minHashDedupPairsFrom(
           s.table("graft_bench_minhash_q40"),
-          s.table("graft_bench_minhash_q40_shingles"), "doc_id")
+          s.table(Warehouse.sideTable("graft_bench_minhash_q40", Side.Shingles)),
+          "doc_id")
         .orderBy("da", "db")
     }),
 
@@ -1966,24 +1967,20 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_nbmodel_q242", d) {
         val (c1, l1) = TextAnalysis.naiveBayesFit(
           docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", "lang")
-        graft.sources.Warehouse.saveNbModel(c1, l1,
-          "graft_bench_nbmodel_q242")
+        Warehouse.save(Layout.NaiveBayes, "graft_bench_nbmodel_q242", c1, l1)
         val (c2, l2) = TextAnalysis.naiveBayesFit(
           docs.filter(col("doc_id") % 4 === 2), "doc_id", "text", "lang")
-        graft.sources.Warehouse.appendNbModel(c2, l2,
-          "graft_bench_nbmodel_q242")
+        Warehouse.append(Layout.NaiveBayes, "graft_bench_nbmodel_q242", c2, l2)
       }
       ensureStoredIndex("graft_bench_kmed_q245", d) {
-        graft.sources.Warehouse.saveCentroids(
+        Warehouse.save(Layout.Plain, "graft_bench_kmed_q245",
           Similarity.kMediansCentroids(
             emb.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", KMediansK, KMediansIters),
-          "graft_bench_kmed_q245")
+            "vec_id", "embedding", KMediansK, KMediansIters))
       }
       ensureStoredIndex("graft_bench_bpe_q249", d) {
-        graft.sources.Warehouse.saveBpeMerges(
-          Bpe.mergeTable(docs.filter(col("doc_id") % 2 === 0), "text", 8),
-          "graft_bench_bpe_q249")
+        Warehouse.save(Layout.Plain, "graft_bench_bpe_q249",
+          Bpe.mergeTable(docs.filter(col("doc_id") % 2 === 0), "text", 8))
       }
       val test = docs.filter(col("doc_id") % 2 === 1)
       val nb = TextAnalysis.naiveBayesScoreStored(
@@ -2032,9 +2029,8 @@ object ExtQueries {
         if (fs.exists(hp)) fs.delete(hp, true)
         val idx = docs.filter(col("doc_id") % 2 === 0)
         val sh = Dedup.shingles(idx, "doc_id", "text", n = 3).persist()
-        try graft.sources.Warehouse.saveMinHashIndex(
-          Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh,
-          "graft_bench_admit_q251")
+        try Warehouse.save(Layout.minHash(), "graft_bench_admit_q251",
+          Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh)
         finally sh.unpersist()
         graft.streaming.StreamingDedup.admitBatchMinHash(
           docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
@@ -2197,7 +2193,7 @@ object ExtQueries {
     }),
 
     // q255 THROUGH the at-rest index (the q40 pattern — thirteenth
-    // at-rest family, Warehouse.saveWinnowIndex): the screened
+    // at-rest family, Layout.Winnow): the screened
     // selection is persisted bucketed by fp_hash in two halves (save +
     // blind append — the composition contract in the entry itself) and
     // the pair join consumes the STORED table, pre-distributed on the
@@ -2212,10 +2208,10 @@ object ExtQueries {
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
         val kept = sel.join(rare, "fp_hash")
-        graft.sources.Warehouse.saveWinnowIndex(
-          kept.filter(col("doc_id") % 2 === 0), "graft_bench_winnow_q256")
-        graft.sources.Warehouse.appendWinnowIndex(
-          kept.filter(col("doc_id") % 2 === 1), "graft_bench_winnow_q256")
+        Warehouse.save(Layout.Winnow, "graft_bench_winnow_q256",
+          kept.filter(col("doc_id") % 2 === 0))
+        Warehouse.append(Layout.Winnow, "graft_bench_winnow_q256",
+          kept.filter(col("doc_id") % 2 === 1))
       }
       val kept = s.table("graft_bench_winnow_q256")
       kept.select(col("doc_id").as("da"), col("fp_hash"))
@@ -2634,10 +2630,9 @@ object ExtQueries {
         val hist = docs.filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"),
             Url.syntheticUrl(col("doc_id"), col("lang")).as("url"))
-        graft.sources.Warehouse.saveUrlKeyIndex(
+        Warehouse.save(Layout.UrlKeys, "graft_bench_urldedup_q270",
           hist.select(col("doc_id"),
-            Url.canonicalizeUrlExt(col("url")).as("url_key")),
-          "graft_bench_urldedup_q270")
+            Url.canonicalizeUrlExt(col("url")).as("url_key")))
         graft.streaming.StreamingDedup.admitBatchUrlDedup(
           docs.filter(col("doc_id") % 2 === 1)
             .select(col("doc_id"), col("lang"),
@@ -2715,11 +2710,11 @@ object ExtQueries {
             .as("reg_domain"))
           .groupBy("reg_domain").agg(count(lit(1)).as("n"))
           // seeded history lives in the NEGATIVE stamp namespace
-          // (saveDomainCounts contract) — a 0 stamp would collide with
+          // (Layout.DomainCounts contract) — a 0 stamp would collide with
           // a streaming run's first micro-batch id
           .withColumn("batch_id", lit(-1L))
-        graft.sources.Warehouse.saveDomainCounts(standing,
-          "graft_bench_domadmit_q264")
+        Warehouse.save(Layout.DomainCounts, "graft_bench_domadmit_q264",
+          standing)
         graft.streaming.StreamingDedup.admitBatchDomainCap(
           withUrl.filter(col("doc_id") % 2 === 1)
             .select("doc_id", "lang", "url"),
@@ -2783,8 +2778,8 @@ object ExtQueries {
           .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
-        graft.sources.Warehouse.saveWinnowIndex(sel.join(rare, "fp_hash"),
-          "graft_bench_wadmit_q257")
+        Warehouse.save(Layout.Winnow, "graft_bench_wadmit_q257",
+          sel.join(rare, "fp_hash"))
         graft.streaming.StreamingDedup.admitBatchWinnow(
           docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
           "graft_bench_wadmit_q257", outPath,
@@ -2839,7 +2834,7 @@ object ExtQueries {
           "doc_id", "text", DomainDupJac)
         .orderBy("reg_domain")),
 
-    // Tokenizer model at rest (r13, Warehouse.saveBpeMerges +
+    // Tokenizer model at rest (r13, Layout.Plain +
     // Bpe.applyStats): q185's merges learned on the EVEN docs, stored,
     // replayed over the ODD docs as one chained-replace map-only scan
     // — the fertility/compression readout on held-out text. Completes
@@ -2847,9 +2842,8 @@ object ExtQueries {
     "q249_bpe_apply" -> ((s, d) => {
       val docs = t(s, d, "documents")
       ensureStoredIndex("graft_bench_bpe_q249", d) {
-        graft.sources.Warehouse.saveBpeMerges(
-          Bpe.mergeTable(docs.filter(col("doc_id") % 2 === 0), "text", 8),
-          "graft_bench_bpe_q249")
+        Warehouse.save(Layout.Plain, "graft_bench_bpe_q249",
+          Bpe.mergeTable(docs.filter(col("doc_id") % 2 === 0), "text", 8))
       }
       Bpe.applyStats(docs.filter(col("doc_id") % 2 === 1), "text", "lang",
           s.table("graft_bench_bpe_q249"))
@@ -3549,7 +3543,7 @@ object ExtQueries {
         .orderBy("probe_id", "rn")
     }),
 
-    // Incremental rollup maintenance (Rollup + Warehouse.saveRollup):
+    // Incremental rollup maintenance (Rollup + Layout.Rollup):
     // the standing 90% of events reduces to mergeable partials and is
     // STORED bucketed by day; the trailing 10% arrives as a delta whose
     // partials APPEND blind (the standing table is never read — count/
@@ -3563,13 +3557,12 @@ object ExtQueries {
       val day = expr("ts_ns div 86400000000000")
       val cents = round(col("value") * 100).cast("long")
       val tbl = "graft_bench_rollup_q201"
-      graft.sources.Warehouse.saveRollup(Rollup.dailyPartials(
+      Warehouse.save(Layout.Rollup, tbl, Rollup.dailyPartials(
         ev.filter(col("event_id") % 10 < 9), day,
-        col("event_type"), cents), tbl)
-      graft.sources.Warehouse.saveRollup(Rollup.dailyPartials(
+        col("event_type"), cents))
+      Warehouse.append(Layout.Rollup, tbl, Rollup.dailyPartials(
         ev.filter(col("event_id") % 10 === 9), day,
-        col("event_type"), cents), tbl,
-        mode = org.apache.spark.sql.SaveMode.Append)
+        col("event_type"), cents))
       Rollup.readRollup(s, tbl)
         .select(col("day"), col("event_type"), col("cnt"),
           col("sum_v").as("sum_cents"), col("mean_v").as("mean_cents"),
@@ -3603,7 +3596,7 @@ object ExtQueries {
     // IVF-PQ composite ANN (the faiss IVFx,PQy layout — q53's cell
     // pruning × q83's code compression, PQ fit on RESIDUALS): the
     // persist-and-probe contract against the exact top-3. Config
-    // measured r11 (PqProbe): nlist=16, nprobe=12, subspaces=16,
+    // measured r11 (per-probe hits): nlist=16, nprobe=12, subspaces=16,
     // candidates=150 recalls 3/3 for every probe at BOTH oracle SFs —
     // one-hit margin over the ≥2 floor everywhere. nprobe=8 leaves a
     // candidate-insensitive sf0.01 CELL miss; subspaces=8 at cand=150
@@ -3621,12 +3614,13 @@ object ExtQueries {
         .localCheckpoint()
       val (codes, centroids, codebook) = Similarity.ivfPqIndex(
         emb, "vec_id", "embedding", nlist = 16, subspaces = 16)
-      graft.sources.Warehouse.saveIvfPqIndex(codes, centroids, codebook,
-        "graft_bench_ivfpq_q214")
+      Warehouse.save(Layout.IvfPq, "graft_bench_ivfpq_q214", codes, centroids,
+        codebook)
       storedIndexOwner.put("graft_bench_ivfpq_q214", d)
       val ann = Similarity.ivfPqTopKFrom(s.table("graft_bench_ivfpq_q214"),
-          s.table("graft_bench_ivfpq_q214_centroids"),
-          s.table("graft_bench_ivfpq_q214_codebook"), emb, probes,
+          s.table(Warehouse.sideTable("graft_bench_ivfpq_q214", Side.Centroids)),
+          s.table(Warehouse.sideTable("graft_bench_ivfpq_q214", Side.Codebook)),
+          emb, probes,
           "vec_id", "embedding", k = 3, nprobe = 12, candidates = 150,
           subspaces = 16)
         .select(col("probe_id"), col("nn_id"))
@@ -4186,7 +4180,7 @@ object ExtQueries {
     }),
 
     // Matryoshka over the STORED prefix-column layout (r13,
-    // Warehouse.saveEmbeddingsWithPrefix + matryoshkaTopKStored):
+    // Similarity.withPrefix + matryoshkaTopKStored):
     // stage 1 references ONLY (vec_id, pre) — Parquet column pruning
     // keeps the full vectors on disk, the ¼-bytes lever SCALE.md §20
     // names — and stage 2 re-reads candidates only. Runs against
@@ -4195,8 +4189,8 @@ object ExtQueries {
     "q246_matryoshka_stored" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       ensureStoredIndex("graft_bench_mrl_q246", d) {
-        graft.sources.Warehouse.saveEmbeddingsWithPrefix(emb,
-          "vec_id", "embedding", MatryoshkaPrefix, "graft_bench_mrl_q246")
+        Warehouse.save(Layout.Plain, "graft_bench_mrl_q246",
+          Similarity.withPrefix(emb, "vec_id", "embedding", MatryoshkaPrefix))
       }
       Similarity.matryoshkaTopKStored(s.table("graft_bench_mrl_q246"),
           emb.where(col("vec_id") < 5), "vec_id", "embedding", "pre",
@@ -4204,7 +4198,7 @@ object ExtQueries {
         .orderBy("probe_id", "rn")
     }),
 
-    // Clustering model AT REST (r13, Warehouse.saveCentroids +
+    // Clustering model AT REST (r13, Layout.Plain +
     // Similarity.kMediansCentroids): fit k-medians ONCE on the even
     // half, store the k centroid rows, route the odd half against the
     // stored table with the shuffle-free unrolled assignment — the
@@ -4214,11 +4208,10 @@ object ExtQueries {
     "q245_kmedians_assign" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       ensureStoredIndex("graft_bench_kmed_q245", d) {
-        graft.sources.Warehouse.saveCentroids(
+        Warehouse.save(Layout.Plain, "graft_bench_kmed_q245",
           Similarity.kMediansCentroids(
             emb.filter(col("vec_id") % 2 === 0),
-            "vec_id", "embedding", KMediansK, KMediansIters),
-          "graft_bench_kmed_q245")
+            "vec_id", "embedding", KMediansK, KMediansIters))
       }
       Similarity.classifyNearestCentroid(
           emb.filter(col("vec_id") % 2 === 1),
@@ -4230,7 +4223,7 @@ object ExtQueries {
     }),
 
     // The model AT REST, grown incrementally (r13,
-    // Warehouse.saveNbModel — the twelfth at-rest family, the first
+    // Layout.NaiveBayes — the twelfth at-rest family, the first
     // trained MODEL): fit on one half of the even docs, SAVE, fit the
     // other half, blind APPEND, then score the odd docs from the
     // stored tables with merge-on-read (the q201 additive-partials
@@ -4241,12 +4234,10 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_nbmodel_q242", d) {
         val (c1, l1) = TextAnalysis.naiveBayesFit(
           docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", "lang")
-        graft.sources.Warehouse.saveNbModel(c1, l1,
-          "graft_bench_nbmodel_q242")
+        Warehouse.save(Layout.NaiveBayes, "graft_bench_nbmodel_q242", c1, l1)
         val (c2, l2) = TextAnalysis.naiveBayesFit(
           docs.filter(col("doc_id") % 4 === 2), "doc_id", "text", "lang")
-        graft.sources.Warehouse.appendNbModel(c2, l2,
-          "graft_bench_nbmodel_q242")
+        Warehouse.append(Layout.NaiveBayes, "graft_bench_nbmodel_q242", c2, l2)
       }
       TextAnalysis.naiveBayesScoreStored(
           s, "graft_bench_nbmodel_q242",
@@ -4275,13 +4266,13 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_ivf_q232", d) {
         val (cells, centroids) =
           Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
-        graft.sources.Warehouse.saveIvfIndex(cells, centroids,
-          "graft_bench_ivf_q232")
+        Warehouse.save(Layout.Ivf, "graft_bench_ivf_q232", cells, centroids)
       }
       val filteredCells = s.table("graft_bench_ivf_q232")
         .join(evens.select(col("vec_id").as("id")), "id")
       val ivf = Similarity.ivfCosineTopKFrom(filteredCells,
-          s.table("graft_bench_ivf_q232_centroids"), probes,
+          s.table(Warehouse.sideTable("graft_bench_ivf_q232", Side.Centroids)),
+          probes,
           "vec_id", "embedding", k = 3, nprobe = 12)
         .select(col("probe_id"), col("nn_id"))
       val hits = exact.join(ivf, Seq("probe_id", "nn_id"))
@@ -4363,13 +4354,12 @@ object ExtQueries {
       val ev = CoreQueries.events(s, d)
       val day = expr("ts_ns div 86400000000000")
       val tbl = "graft_bench_rollup_q210"
-      graft.sources.Warehouse.saveRollup(Rollup.distinctPartials(
+      Warehouse.save(Layout.Rollup, tbl, Rollup.distinctPartials(
         ev.filter(col("event_id") % 10 < 9), day,
-        col("event_type"), col("user_id")), tbl)
-      graft.sources.Warehouse.saveRollup(Rollup.distinctPartials(
+        col("event_type"), col("user_id")))
+      Warehouse.append(Layout.Rollup, tbl, Rollup.distinctPartials(
         ev.filter(col("event_id") % 10 === 9), day,
-        col("event_type"), col("user_id")), tbl,
-        mode = org.apache.spark.sql.SaveMode.Append)
+        col("event_type"), col("user_id")))
       val est = Rollup.estimateDistinct(s.table(tbl))
       val exact = ev.select(day.as("day"), col("event_type"), col("user_id"))
         .groupBy("day", "event_type")
@@ -4948,7 +4938,7 @@ object ExtQueries {
     // is now checked as values, not a self-graded boolean.
     // Since round 8 the entry exercises the PERSIST-AND-PROBE path (the
     // q75 pattern): the inverted file + centroid table are written once
-    // as warehouse tables (Warehouse.saveIvfIndex, cell-bucketed) and
+    // as warehouse tables (Layout.Ivf, cell-bucketed) and
     // the probe consumes the STORED tables — the production split the
     // stored-index specs prove pruning for. Table names are
     // graft_bench_-prefixed: internal scratch namespace, never a user
@@ -4964,10 +4954,11 @@ object ExtQueries {
         .localCheckpoint()
       val (cells, centroids) =
         Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
-      graft.sources.Warehouse.saveIvfIndex(cells, centroids, "graft_bench_ivf_q53")
+      Warehouse.save(Layout.Ivf, "graft_bench_ivf_q53", cells, centroids)
       storedIndexOwner.put("graft_bench_ivf_q53", d)
       val ivf = Similarity.ivfCosineTopKFrom(s.table("graft_bench_ivf_q53"),
-          s.table("graft_bench_ivf_q53_centroids"), probes,
+          s.table(Warehouse.sideTable("graft_bench_ivf_q53", Side.Centroids)),
+          probes,
           "vec_id", "embedding", k = 3, nprobe = 8)
         .select(col("probe_id"), col("nn_id"))
       val hits = exact.join(ivf, Seq("probe_id", "nn_id"))
@@ -4995,10 +4986,11 @@ object ExtQueries {
         // full-corpus cosine scans (r16)
         .localCheckpoint()
       val (codes, params) = Similarity.sq8Index(emb, "vec_id", "embedding")
-      graft.sources.Warehouse.saveSq8Index(codes, params, "graft_bench_sq8_q117")
+      Warehouse.save(Layout.Sq8, "graft_bench_sq8_q117", codes, params)
       storedIndexOwner.put("graft_bench_sq8_q117", d)
       val sq = Similarity.sq8CosineTopKFrom(s.table("graft_bench_sq8_q117"),
-          s.table("graft_bench_sq8_q117_params"), emb, probes,
+          s.table(Warehouse.sideTable("graft_bench_sq8_q117", Side.Params)),
+          emb, probes,
           "vec_id", "embedding", k = 3, candidates = 20)
         .select(col("probe_id"), col("nn_id"))
       val hits = exact.join(sq, Seq("probe_id", "nn_id"))
@@ -5013,7 +5005,7 @@ object ExtQueries {
     // round 10): exact neighbor rows checked as values, ≥2-of-3 PQ
     // recall floor as `ok`. candidates=150 (cut from the round-5
     // setting of 200, enabled by per-subspace codebooks +
-    // farthest-point seeding): PqProbe measured per-probe hits at BOTH
+    // farthest-point seeding): per-probe hits measured at BOTH
     // oracle SFs — 150 recalls 3/3 for every probe (one-hit margin over
     // the ≥2 floor); 100 also passes but with ZERO margin on one sf0.1
     // probe, too tight for a codebook fit whose float-sum order is not
@@ -5081,7 +5073,7 @@ object ExtQueries {
     // band condition over an all-pairs join (fine at oracle scale).
     // Since round 7 the entry exercises the PERSIST-AND-PROBE path:
     // fingerprints are written once as a key-bucketed warehouse table
-    // (Warehouse.saveSimHashIndex) and the pair join consumes the
+    // (Layout.SimHash) and the pair join consumes the
     // stored table — both sides arrive hash-distributed on `key`, so
     // the join itself needs no exchange, and future probes never
     // re-fingerprint the corpus. Output (and oracle) unchanged. The
@@ -5091,7 +5083,7 @@ object ExtQueries {
     "q75_simhash_neardup" -> ((s, d) => {
       val bands = Dedup.simHashBandFrame(t(s, d, "documents"), "doc_id",
         split(col("text"), " "))
-      graft.sources.Warehouse.saveSimHashIndex(bands, "graft_bench_simhash_q75")
+      Warehouse.save(Layout.SimHash, "graft_bench_simhash_q75", bands)
       storedIndexOwner.put("graft_bench_simhash_q75", d)
       Dedup.simHashNearDupPairsFrom(s.table("graft_bench_simhash_q75"), "doc_id",
           maxHamming = 16)
@@ -5275,7 +5267,7 @@ object ExtQueries {
   /** q41c's session-cached ANN index, keyed by sf dir: built + persisted
     * on first use (the bench warm-up pass), so the TIMED passes measure
     * probe cost alone — the at-rest production split (index built once,
-    * probed forever; [[graft.sources.Warehouse.saveAnnIndex]] is the
+    * probed forever; [[graft.sources.Layout.Ann]] is the
     * same split with parquet instead of the block-manager cache). */
   private val annIndexCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
@@ -5320,7 +5312,7 @@ object ExtQueries {
     // 500 probes (not the oracle's 5): at test scale a 5-probe query of
     // ANY path sits on the ~0.3 s job-launch floor, so the exact-vs-ANN
     // gap only shows once per-row work dominates. Config tables=32,
-    // bits=6 with MEASURED recall under this exact load (Q41cRecall,
+    // bits=6 with MEASURED recall under this exact load (SCALE.md §10,
     // 500 probes, k=3): recall@3 = 0.829 at sf0.01 / 0.850 at sf0.1
     // (per-probe hit dist at sf0.1 — 3/3: 310, 2/3: 158, 1/3: 29,
     // 0/3: 3). The former 8×11 "bits≈log₂N" config measured 0.046/0.054
@@ -5329,7 +5321,7 @@ object ExtQueries {
     // Candidate sets are ~tables·N/2^bits ≈ N/2 on this corpus:
     // near-random vectors are LSH's worst case, so ≈2× scan pruning at
     // 0.85 recall IS the frontier here (clustered real embeddings sit
-    // far above it; the recall sweep is one `runMain graft.Q41cRecall`).
+    // far above it; SCALE.md §10 records the recall sweep).
     // Compare q41d_exact_batch — the SAME 500-probe load, exact path.
     "q41c_ann_probe" -> ((s, d) => {
       val idx = annIndexCache.getOrElseUpdate(d, {
@@ -5347,7 +5339,7 @@ object ExtQueries {
     // Multi-probe LSH under q41c's identical 500-probe load, HALF the
     // stored index (16 tables vs 32, bits=8): query-directed flips=6
     // recover what the missing tables would have found. Measured
-    // (graft.MultiProbe, recall@3 vs exact): 0.823 at sf0.01 / 0.871 at
+    // (SCALE.md §10, recall@3 vs exact): 0.823 at sf0.01 / 0.871 at
     // sf0.1 vs q41c's 0.829/0.850 — same recall, half the index rows
     // and half the per-row hash work at build AND probe time. The
     // index-size/recall trade moves to probe-time policy (SCALE.md §10:
@@ -5388,10 +5380,11 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_ivf_q53", d) {
         val (cells, centroids) =
           Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
-        graft.sources.Warehouse.saveIvfIndex(cells, centroids, "graft_bench_ivf_q53")
+        Warehouse.save(Layout.Ivf, "graft_bench_ivf_q53", cells, centroids)
       }
       Similarity.ivfCosineTopKFrom(s.table("graft_bench_ivf_q53"),
-          s.table("graft_bench_ivf_q53_centroids"), probes,
+          s.table(Warehouse.sideTable("graft_bench_ivf_q53", Side.Centroids)),
+          probes,
           "vec_id", "embedding", k = 3, nprobe = 8)
         .select("probe_id", "nn_id", "sim", "rn")
         .orderBy("probe_id", "rn")
@@ -5401,10 +5394,11 @@ object ExtQueries {
       val probes = emb.filter(col("vec_id") < 5)
       ensureStoredIndex("graft_bench_pq_q83b", d) {
         val (codes, cb) = Similarity.pqIndex(emb, "vec_id", "embedding")
-        graft.sources.Warehouse.savePqIndex(codes, cb, "graft_bench_pq_q83b")
+        Warehouse.save(Layout.Pq, "graft_bench_pq_q83b", codes, cb)
       }
       Similarity.pqCosineTopKFrom(s.table("graft_bench_pq_q83b"),
-          s.table("graft_bench_pq_q83b_codebook"), emb, probes,
+          s.table(Warehouse.sideTable("graft_bench_pq_q83b", Side.Codebook)),
+          emb, probes,
           "vec_id", "embedding", k = 3, candidates = 150)
         .select("probe_id", "nn_id", "sim", "rn")
         .orderBy("probe_id", "rn")
@@ -5425,14 +5419,14 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_minhash_q40", d) {
         val docs = t(s, d, "documents")
         val sh = Dedup.shingles(docs, "doc_id", "text", n = 3).persist()
-        try graft.sources.Warehouse.saveMinHashIndex(
-          Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh,
-          "graft_bench_minhash_q40")
+        try Warehouse.save(Layout.minHash(), "graft_bench_minhash_q40",
+          Dedup.minHashBandFrameFromShingles(sh, "doc_id"), sh)
         finally sh.unpersist()
       }
       Dedup.minHashDedupPairsFrom(
           s.table("graft_bench_minhash_q40"),
-          s.table("graft_bench_minhash_q40_shingles"), "doc_id")
+          s.table(Warehouse.sideTable("graft_bench_minhash_q40", Side.Shingles)),
+          "doc_id")
         .orderBy("da", "db")
     }),
     // SQ8 ANN with the code+params tables PREBUILT: the probe-only
@@ -5445,10 +5439,11 @@ object ExtQueries {
       val probes = emb.filter(col("vec_id") < 5)
       ensureStoredIndex("graft_bench_sq8_q117", d) {
         val (codes, params) = Similarity.sq8Index(emb, "vec_id", "embedding")
-        graft.sources.Warehouse.saveSq8Index(codes, params, "graft_bench_sq8_q117")
+        Warehouse.save(Layout.Sq8, "graft_bench_sq8_q117", codes, params)
       }
       Similarity.sq8CosineTopKFrom(s.table("graft_bench_sq8_q117"),
-          s.table("graft_bench_sq8_q117_params"), emb, probes,
+          s.table(Warehouse.sideTable("graft_bench_sq8_q117", Side.Params)),
+          emb, probes,
           "vec_id", "embedding", k = 3, candidates = 20)
         .select("probe_id", "nn_id", "sim", "rn")
         .orderBy("probe_id", "rn")
@@ -5464,12 +5459,13 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_ivfpq_q214", d) {
         val (codes, centroids, codebook) = Similarity.ivfPqIndex(
           emb, "vec_id", "embedding", nlist = 16, subspaces = 16)
-        graft.sources.Warehouse.saveIvfPqIndex(codes, centroids, codebook,
-          "graft_bench_ivfpq_q214")
+        Warehouse.save(Layout.IvfPq, "graft_bench_ivfpq_q214", codes, centroids,
+          codebook)
       }
       Similarity.ivfPqTopKFrom(s.table("graft_bench_ivfpq_q214"),
-          s.table("graft_bench_ivfpq_q214_centroids"),
-          s.table("graft_bench_ivfpq_q214_codebook"), emb, probes,
+          s.table(Warehouse.sideTable("graft_bench_ivfpq_q214", Side.Centroids)),
+          s.table(Warehouse.sideTable("graft_bench_ivfpq_q214", Side.Codebook)),
+          emb, probes,
           "vec_id", "embedding", k = 3, nprobe = 12, candidates = 150,
           subspaces = 16)
         .select("probe_id", "nn_id", "sim", "rn")
@@ -5492,10 +5488,10 @@ object ExtQueries {
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
         val kept = sel.join(rare, "fp_hash")
-        graft.sources.Warehouse.saveWinnowIndex(
-          kept.filter(col("doc_id") % 2 === 0), "graft_bench_winnow_q256")
-        graft.sources.Warehouse.appendWinnowIndex(
-          kept.filter(col("doc_id") % 2 === 1), "graft_bench_winnow_q256")
+        Warehouse.save(Layout.Winnow, "graft_bench_winnow_q256",
+          kept.filter(col("doc_id") % 2 === 0))
+        Warehouse.append(Layout.Winnow, "graft_bench_winnow_q256",
+          kept.filter(col("doc_id") % 2 === 1))
       }
       Dedup.winnowMatchesAgainst(
           Dedup.winnowingFingerprints(
@@ -5511,7 +5507,7 @@ object ExtQueries {
       ensureStoredIndex("graft_bench_simhash_q75", d) {
         val bands = Dedup.simHashBandFrame(t(s, d, "documents"), "doc_id",
           split(col("text"), " "))
-        graft.sources.Warehouse.saveSimHashIndex(bands, "graft_bench_simhash_q75")
+        Warehouse.save(Layout.SimHash, "graft_bench_simhash_q75", bands)
       }
       Dedup.simHashNearDupPairsFrom(s.table("graft_bench_simhash_q75"),
           "doc_id", maxHamming = 16)
@@ -5523,9 +5519,8 @@ object ExtQueries {
     // recurring cost of keyword search once the index is at rest.
     "q112b_conj_probe" -> ((s, d) => {
       ensureStoredIndex("graft_bench_inverted_q112", d) {
-        graft.sources.Warehouse.saveInvertedIndex(
-          Search.postings(t(s, d, "documents"), "doc_id", "text"),
-          "graft_bench_inverted_q112")
+        Warehouse.save(Layout.Inverted, "graft_bench_inverted_q112",
+          Search.postings(t(s, d, "documents"), "doc_id", "text"))
       }
       Search.conjunctiveSearch(s.table("graft_bench_inverted_q112"),
         SearchTerms)
@@ -5539,18 +5534,16 @@ object ExtQueries {
     // timed probe is gram-bucket lookups + candidate-only verify.
     "q225b_substr_probe" -> ((s, d) => {
       ensureStoredIndex("graft_bench_trigram_q225", d) {
-        graft.sources.Warehouse.saveTrigramIndex(
-          Search.trigramPostings(t(s, d, "documents"), "doc_id", "text"),
-          "graft_bench_trigram_q225")
+        Warehouse.save(Layout.Trigram, "graft_bench_trigram_q225",
+          Search.trigramPostings(t(s, d, "documents"), "doc_id", "text"))
       }
       Search.substringSearch(s.table("graft_bench_trigram_q225"),
         t(s, d, "documents"), "doc_id", "text", "scan slow")
     }),
     "q189b_phrase_probe" -> ((s, d) => {
       ensureStoredIndex("graft_bench_positional_q189", d) {
-        graft.sources.Warehouse.saveInvertedIndex(
-          Search.positionalPostings(t(s, d, "documents"), "doc_id", "text"),
-          "graft_bench_positional_q189")
+        Warehouse.save(Layout.Inverted, "graft_bench_positional_q189",
+          Search.positionalPostings(t(s, d, "documents"), "doc_id", "text"))
       }
       Search.phraseDocsFrom(s.table("graft_bench_positional_q189"),
         "slow query")
@@ -5565,13 +5558,14 @@ object ExtQueries {
         val corpusTf = Dedup.cappedLexicalTf(
           t(s, d, "documents").filter(col("doc_id") >= 20),
           "doc_id", "text", maxDf = 400L)
-        graft.sources.Warehouse.saveLexicalIndex(corpusTf,
-          Dedup.lexicalNorms(corpusTf), "graft_bench_lexical_q192")
+        Warehouse.save(Layout.Lexical, "graft_bench_lexical_q192", corpusTf,
+          Dedup.lexicalNorms(corpusTf))
       }
       Dedup.lexicalCosineAgainst(
         t(s, d, "documents").filter(col("doc_id") < 20), "doc_id", "text",
         s.table("graft_bench_lexical_q192"),
-        s.table("graft_bench_lexical_q192_norms"), minSim = 0.8)
+        s.table(Warehouse.sideTable("graft_bench_lexical_q192", Side.Norms)),
+        minSim = 0.8)
     })
   )
 

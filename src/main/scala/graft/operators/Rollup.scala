@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
  *
  *  - `dailyPartials` reduces a batch to one row per (day, type) —
  *    map-side-combined hash aggregate, cost ∝ batch;
- *  - `Warehouse.saveRollup` stores the partials bucketed by `day`, and
+ *  - `Layout.Rollup` stores the partials bucketed by `day`, and
  *    appending a batch's partials is a blind bucketed write (no read of
  *    the standing table, nothing to coordinate — count/sum/min/max are
  *    commutative monoids, so duplicate PARTIAL rows per key are the
@@ -88,7 +88,7 @@ object Rollup {
    * rollup family: per-(day, type) HLL sketches
    * (`hll_sketch_agg`, Apache DataSketches binary), stored and
    * appended exactly like the count/sum/min/max partials
-   * ([[graft.sources.Warehouse.saveRollup]] buckets on `day` and never
+   * ([[graft.sources.Layout.Rollup]] buckets on `day` and never
    * reads the standing table). Sketch union is the monoid combine, so
    * "distinct users per day" survives blind appends the way counts do
    * — the one aggregate exact partials CANNOT give incrementally

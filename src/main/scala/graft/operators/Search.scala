@@ -119,7 +119,7 @@ object Search {
    * semi-join-per-term plan pays n−1 shuffles.
    *
    * Works identically against the live corpus or a persisted postings
-   * table (see [[graft.sources.Warehouse.saveInvertedIndex]]) — the
+   * table (see [[graft.sources.Layout.Inverted]]) — the
    * stored probe prunes on the term filter at the scan.
    */
   def conjunctiveSearch(postings: DataFrame, terms: Seq[String]): DataFrame = {
@@ -146,7 +146,7 @@ object Search {
    * heaviest first. Works over [[postings]] or [[positionalPostings]]
    * (the inner distinct collapses positional duplicates).
    *
-   * At-rest pruning story: hash buckets ([[graft.sources.Warehouse.saveInvertedIndex]])
+   * At-rest pruning story: hash buckets ([[graft.sources.Layout.Inverted]])
    * can't prune a RANGE of tokens, but the saver also sorts within
    * buckets by token, so the pushed `StringStartsWith` predicate skips
    * parquet row groups via their min/max stats — the scan cost tracks
@@ -180,7 +180,7 @@ object Search {
    * semantics (`"a a"` in `"a a a"` starts at 0 AND 1).
    *
    * `pp` is a positional-postings frame — [[positionalPostings]] live,
-   * or the table [[graft.sources.Warehouse.saveInvertedIndex]] persists
+   * or the table [[graft.sources.Layout.Inverted]] persists
    * from it (bucketed by token; the extra pos column rides along).
    */
   def phraseStarts(pp: DataFrame, phrase: String): DataFrame = {
@@ -250,7 +250,7 @@ object Search {
    *
    * Build cost is one pass (≈len grams per doc before the per-doc
    * distinct, HOF-generated — acceptable: builds are one-time and
-   * amortized by [[graft.sources.Warehouse.saveTrigramIndex]]'s
+   * amortized by [[graft.sources.Layout.Trigram]]'s
    * at-rest table + blind appends). Texts shorter than 3 chars
    * contribute no grams (the sequence guard — `sequence(0,-1)`
    * DESCENDS) and can only be found by the caller's fallback scan.

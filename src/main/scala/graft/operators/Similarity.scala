@@ -257,7 +257,7 @@ object Similarity {
    * stored index and join shape, probe side carries `1+flips` keys per
    * table. `flips = 0` is bit-identical to the single-probe path
    * (spec). Candidate sets are supersets of single-probe's, so recall
-   * is monotone in `flips` (spec). Measured ([[graft.MultiProbe]],
+   * is monotone in `flips` (spec). Measured (SCALE.md §10,
    * sf0.1, q41c's 500-probe load, recall@3 vs exact kNN):
    *
    *   - over-grown-bits regime t=32 b=8 (the third-decade shape):
@@ -287,7 +287,7 @@ object Similarity {
   /**
    * The exploded LSH bucket frame `(id, emb, table, key)` — the
    * persistable ANN index. At rest, write it `bucketBy(key)`
-   * ([[graft.sources.Warehouse.saveAnnIndex]]) so a probe lookup becomes
+   * ([[graft.sources.Layout.Ann]]) so a probe lookup becomes
    * a bucket-pruned scan instead of a full pass over the corpus.
    */
   def annBucketFrame(corpus: DataFrame, idCol: String, embCol: String,
@@ -431,7 +431,7 @@ object Similarity {
   /**
    * The probe side of [[annCosineTopK]] against an ALREADY-BUILT bucket
    * frame ([[annBucketFrame]] layout, possibly persisted or read back
-   * from a [[graft.sources.Warehouse.saveAnnIndex]] table): hashing the
+   * from a [[graft.sources.Layout.Ann]] table): hashing the
    * corpus is the INDEX-BUILD cost, paid once — a production query pays
    * only probe hashing + bucket join + candidate re-rank. Bench entry
    * q41c times exactly this split.
@@ -527,7 +527,7 @@ object Similarity {
 
   /** The [[annBucketFrame]] twin for the L2 family — `(id, emb, table,
     * key)`, persistable through the same
-    * [[graft.sources.Warehouse.saveAnnIndex]] layout. */
+    * [[graft.sources.Layout.Ann]] layout. */
   def l2BucketFrame(corpus: DataFrame, idCol: String, embCol: String,
                     tables: Int, bits: Int, dim: Int = 64,
                     w: Double = 2.0, seed: Long = 42L): DataFrame = {
@@ -603,7 +603,7 @@ object Similarity {
    * next = the candidate farthest from all chosen. Plain hash-random
    * init measurably lost recall — at sf0.1 it left per-subspace
    * codebooks WORSE than the shared baseline (q83 probe 3 under the
-   * floor at candidates=100; PqProbe). A code that loses every point
+   * floor at candidates=100; SCALE.md §5). A code that loses every point
    * keeps its previous centroid. Returns centroids[sub][code][dim].
    * `groupPerSub=false` collapses every subvector into group 0 — the
    * shared-codebook variant, kept for the recall-comparison spec.
@@ -868,7 +868,7 @@ object Similarity {
    * `subspaces` small ints per vector, the ~32×-compressed index — and
    * the codebook table `(sub, code, centroid)` (subspaces × codebook
    * rows, broadcast-sized). At rest, write both via
-   * [[graft.sources.Warehouse.savePqIndex]]; unlike LSH/IVF there is
+   * [[graft.sources.Layout.Pq]]; unlike LSH/IVF there is
    * no pruning key — an ADC query scans every code row by design, the
    * win is that the scan is 8 ints/vector instead of the embeddings.
    */
@@ -907,7 +907,7 @@ object Similarity {
 
   /**
    * Encode NEW rows against an EXISTING codebook — the incremental-append
-   * half of the PQ index ([[graft.sources.Warehouse.appendPqIndex]]): at
+   * half of the PQ index ([[graft.sources.Warehouse.append]]): at
    * 100 TB an index is never rebuilt for a daily batch, the batch is
    * encoded with the stored codebook (faiss `add` vs `train`) and its
    * code rows appended. The codebook frame is the [[pqIndex]] /
@@ -946,7 +946,7 @@ object Similarity {
 
   /** The ADC query side of [[pqCosineTopK]] against an ALREADY-BUILT
     * code index ([[pqIndex]] layout, fresh or read back from
-    * [[graft.sources.Warehouse.savePqIndex]]). `corpus` supplies raw
+    * [[graft.sources.Layout.Pq]]). `corpus` supplies raw
     * embeddings for the exact re-rank of the `candidates` only — the
     * point-lookup join a production store serves by id. */
   def pqCosineTopKFrom(codes: DataFrame, codebookDf: DataFrame,
@@ -990,7 +990,7 @@ object Similarity {
    * The persistable IVF layout: the cell frame `(id, emb, cell)` (the
    * "inverted file" — corpus scanned ONCE for assignment) and the
    * centroid table `(cell, centroid)` (nlist rows). At rest, write the
-   * cell frame `bucketBy(cell)` ([[graft.sources.Warehouse.saveIvfIndex]])
+   * cell frame `bucketBy(cell)` ([[graft.sources.Layout.Ivf]])
    * so a probe's `nprobe` cells become a bucket-pruned scan; the
    * centroid table is tiny and rides anywhere.
    *
@@ -1033,7 +1033,7 @@ object Similarity {
 
   /**
    * Assign NEW rows to EXISTING IVF cells — the incremental-append half
-   * of the inverted file ([[graft.sources.Warehouse.appendIvfIndex]]):
+   * of the inverted file ([[graft.sources.Warehouse.append]]):
    * the coarse quantizer is never refit for a batch append, the batch is
    * assigned against the stored centroid table `(cell, centroid)` with
    * the same compiled argmin as the initial build and its cell rows
@@ -1061,7 +1061,7 @@ object Similarity {
 
   /** The probe side of [[ivfCosineTopK]] against an ALREADY-BUILT index
     * ([[ivfIndex]] layout, fresh or read back from
-    * [[graft.sources.Warehouse.saveIvfIndex]]): nprobe nearest cells
+    * [[graft.sources.Layout.Ivf]]): nprobe nearest cells
     * per probe by cosine against the broadcast centroids, then exact
     * re-rank of only those cells' rows. */
   def ivfCosineTopKFrom(cells: DataFrame, centroids: DataFrame,
@@ -1162,7 +1162,7 @@ object Similarity {
    *
    * Returns (codes `(id, cell, sub, code)`, centroids `(cell,
    * centroid)`, codebook `(sub, code, centroid)`). At rest write via
-   * [[graft.sources.Warehouse.saveIvfPqIndex]] — codes `bucketBy(cell)`
+   * [[graft.sources.Layout.IvfPq]] — codes `bucketBy(cell)`
    * (the pruning key rides every code row); both side tables are
    * broadcast-sized by construction (nlist rows / subspaces×codebook
    * rows).
@@ -1227,7 +1227,7 @@ object Similarity {
 
   /**
    * Encode NEW rows against an EXISTING IVF-PQ index — the
-   * incremental-append half ([[graft.sources.Warehouse.appendIvfPqIndex]]):
+   * incremental-append half ([[graft.sources.Warehouse.append]]):
    * neither quantizer refits for a daily batch; cells come from the
    * stored centroid table and codes from the stored residual codebook,
    * assigned by the SAME compiled argmins as the build, so appended
@@ -1269,7 +1269,7 @@ object Similarity {
   /**
    * The probe side against an ALREADY-BUILT IVF-PQ index
    * ([[ivfPqIndex]] layout, fresh or read back from
-   * [[graft.sources.Warehouse.saveIvfPqIndex]]): nprobe cells per
+   * [[graft.sources.Layout.IvfPq]]): nprobe cells per
    * probe ranked by `dot(unit(q), µ_c)` (the additive term of the
    * score decomposition, so cell choice and scoring share one
    * geometry), candidate scores by residual ADC —
@@ -1383,7 +1383,7 @@ object Similarity {
   /**
    * SQ8 ANN probe against an already-built code table ([[sq8Index]]
    * layout, fresh or read back from
-   * [[graft.sources.Warehouse.saveSq8Index]]): candidates ranked by
+   * [[graft.sources.Layout.Sq8]]): candidates ranked by
    * cosine over the DEQUANTIZED codes (`mn + (c + 0.5)/scale` — the
    * level midpoint halves the worst-case reconstruction error), then
    * the exact re-rank of `candidates` rows only against the raw
@@ -1723,7 +1723,7 @@ object Similarity {
   /**
    * The centroid half of [[kMedians]] — the fitted model `(label,
    * centroid)` after `iters` Lloyd rounds, for persisting at rest
-   * ([[graft.sources.Warehouse.saveCentroids]]) and assigning LATER
+   * ([[graft.sources.Layout.Plain]]) and assigning LATER
    * batches without a refit (the IVF `ivfAssign` posture, via
    * [[classifyNearestCentroid]]): fit once on a training slice, store
    * k rows, route any future corpus against them with the shuffle-free
@@ -1758,9 +1758,20 @@ object Similarity {
       col("centroid").cast("array<float>").as("centroid"))
   }
 
+  /** The MRL/matryoshka serving layout: `(idCol, embCol)` plus the first
+    * `prefixDim` coordinates materialized as their own `pre` column, so
+    * a stored truncated-dimension first pass ([[matryoshkaTopKStored]])
+    * reads prefixDim/dim of the vector bytes via Parquet column pruning
+    * (SCALE.md §20). Per-row derived, nothing fitted — stored with
+    * [[graft.sources.Layout.Plain]], appends are safe. */
+  def withPrefix(emb: DataFrame, idCol: String, embCol: String,
+                 prefixDim: Int): DataFrame =
+    emb.select(col(idCol), col(embCol),
+      slice(col(embCol), 1, prefixDim).as("pre"))
+
   /**
    * [[matryoshkaTopK]] over a STORED prefix-column layout
-   * ([[graft.sources.Warehouse.saveEmbeddingsWithPrefix]]): stage 1
+   * ([[withPrefix]]): stage 1
    * references ONLY `(idCol, preCol)` — Parquet column pruning keeps
    * the full vectors on disk for the prefixDim/dim fraction of the
    * scan bytes that SCALE.md §20 identified as the operator's real
@@ -1783,7 +1794,7 @@ object Similarity {
       require(r.getInt(0) == prefixDim,
         s"matryoshkaTopKStored: stored $preCol length ${r.getInt(0)} " +
           s"!= prefixDim $prefixDim — rebuild the layout " +
-          "(Warehouse.saveEmbeddingsWithPrefix) or pass the saved dim")
+          "(Similarity.withPrefix) or pass the saved dim")
     }
     val pPre = probes.select(col(idCol).as("probe_id"),
       slice(col(embCol), 1, prefixDim).as("_ppre"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{Side, Warehouse}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -431,7 +432,7 @@ object TextAnalysis {
 
   /**
    * The training half of [[naiveBayesClassify]], split out so the model
-   * can persist at rest ([[graft.sources.Warehouse.saveNbModel]]) and
+   * can persist at rest ([[graft.sources.Layout.NaiveBayes]]) and
    * grow by BLIND APPEND: both frames are pure additive count partials
    * (the q201 rollup discipline), so appending a new batch's partials
    * and merging on read is EXACTLY a retrain on the union — no refit,
@@ -523,9 +524,9 @@ object TextAnalysis {
   }
 
   /**
-   * Serve a STORED NB model ([[graft.sources.Warehouse.saveNbModel]])
+   * Serve a STORED NB model ([[graft.sources.Layout.NaiveBayes]])
    * by table name: reads the count partials, the label partials, and
-   * the one-row `<table>_params` `(vocab_size)` the saver maintains —
+   * the one-row `<table>_params` `(vocab_size)` the layout derives —
    * so a serve is exactly one postings join + one doc-keyed aggregate,
    * with NO full pass over the standing count table to recover |V|
    * (the r13 verdict's wart: `distinct().count()` per serve is a
@@ -537,14 +538,14 @@ object TextAnalysis {
                             modelTable: String, test: DataFrame,
                             idCol: String, textCol: String,
                             labelCol: String): DataFrame = {
-    val paramsTable = s"${modelTable}_params"
+    val paramsTable = Warehouse.sideTable(modelTable, Side.NbParams)
     val vocab =
       if (spark.catalog.tableExists(paramsTable))
         Some(spark.table(paramsTable).select("vocab_size")
           .head().getLong(0))
       else None
     naiveBayesScoreFrom(spark.table(modelTable),
-      spark.table(s"${modelTable}_labels"), test,
+      spark.table(Warehouse.sideTable(modelTable, Side.Labels)), test,
       idCol, textCol, labelCol, vocab)
   }
 }

@@ -174,9 +174,4 @@ object SlowLogSource {
     import spark.implicits._
     readRaw(spark, path).drop("file").as[SlowLogEvent]
   }
-
-  /** Session-carried fields re-established across record boundaries:
-    * `use db` and the Percona rate annotations carry forward to later
-    * events that set none of their own — last non-null per file in
-    * byte-offset order. One window spec, one sort, all three fills. */
 }

@@ -41,7 +41,7 @@ object SlowLogTable {
 
   /** The codegen'd fingerprint ([[graft.functions.FingerprintExpr]]) —
     * the ingest default since the §7.4 profile measured the UDF
-    * boundary at 31% of ingest wall time (FpProfile, SCALE.md §7). */
+    * boundary at 31% of ingest wall time (SCALE.md §9). */
   def fingerprintCol(q: Column): Column =
     org.apache.spark.sql.graftbridge.GraftColumnBridge.column(
       graft.functions.FingerprintExpr(
@@ -68,7 +68,8 @@ object SlowLogTable {
 
   /** [[flatten]] with an explicit fingerprint expression — the knob the
     * SURVEY §7.4 ingest profile measures (real UDF vs identity column;
-    * see [[graft.FpProfile]] and SCALE.md §7). */
+    * SCALE.md §9; perfbench's `slowlog.fingerprint_share` re-measures
+    * it). */
   def flatten(events: DataFrame, fingerprint: Column): DataFrame = {
     val timeCols = TimeKeys.map(k =>
       coalesce(element_at(col("timeMetrics"), k), lit(0.0)).as(k.toLowerCase))

@@ -3,11 +3,152 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** A side table stored beside a family's main table as
+  * `<table><suffix>` ([[Warehouse.sideTable]]). An ADDITIVE side holds
+  * partials that grow with every append of the main table; a MODEL side
+  * holds a fitted model (centroids, codebook, quantizer params) and is
+  * written only by an overwriting [[Warehouse.save]] — appends encode
+  * against it, never into it, so a one-row model table stays one row.
+  * A DERIVED side (`derive` set) is neither: it is recomputed from the
+  * stored main table after every [[Warehouse.save]] and
+  * [[Warehouse.append]], and no caller passes its frame.
+  * `key` buckets (and sorts) the side like a main table; `None` writes
+  * it plain. */
+final case class Side(suffix: String, additive: Boolean,
+                      key: Option[String] = None,
+                      derive: Option[DataFrame => DataFrame] = None)
+
+object Side {
+  /** MinHash shingles, bucketed by the document id so the exact-Jaccard
+    * verify joins co-locate on their id keys. */
+  val Shingles = Side("_shingles", additive = true, Some("doc_id"))
+  /** Lexical squared norms over the same capped vectors as the index. */
+  val Norms = Side("_norms", additive = true)
+  /** Naive Bayes per-label partials `(_lab, tot, n_docs)`. */
+  val Labels = Side("_labels", additive = true)
+  /** IVF / IVF-PQ coarse centroids `(cell, centroid)`. */
+  val Centroids = Side("_centroids", additive = false)
+  /** PQ / IVF-PQ codebook `(sub, code, centroid)`. */
+  val Codebook = Side("_codebook", additive = false)
+  /** SQ8's one-row `(mins, scales)` quantizer params. */
+  val Params = Side("_params", additive = false)
+  /** NB's one-row `(vocab_size)`. |V| is not additive across batches,
+    * so it is recounted from the stored counts at write time (distinct
+    * on the bucket key, no shuffle) instead of scanned on every serve
+    * ([[graft.operators.TextAnalysis.naiveBayesScoreStored]]). */
+  val NbParams = Params.copy(derive = Some(
+    _.agg(count_distinct(col("tok")).as("vocab_size"))))
+}
+
 /**
- * The wide-table warehouse layout from SCALE.md §2, made concrete:
- * date-partitioned (partition pruning for every time-windowed QAN query)
- * and optionally digest-bucketed (per-digest aggregates and joins
- * co-locate without an exchange).
+ * How one at-rest family lays out its tables: the bucket (= sort)
+ * column of the main table (`None` for a plain table), the FLOOR bucket
+ * count handed to [[Warehouse.adaptiveBuckets]], and the side tables
+ * written beside it. Bucketing by the probe key is the SCALE.md §5
+ * "index as a table layout": a lookup filtering on its keys scans only
+ * the matching file buckets (`SelectedBucketsCount` in the plan), and a
+ * join or aggregate on the key reads the stored side pre-distributed, so
+ * only the batch side shuffles. `sortBy(key)` keeps each key's run
+ * contiguous inside its bucket file.
+ */
+final case class Layout(key: Option[String], floor: Int = 32,
+                        sides: Seq[Side] = Nil) {
+  /** Each table of the family with the layout it is written under on
+    * its own — the main table first, then every side (sides bucket with
+    * the family's floor). Crash repair appends a single table of a
+    * family through this. */
+  def parts(table: String): Seq[(String, Layout)] =
+    (table, copy(sides = Nil)) +:
+      sides.map(s => (Warehouse.sideTable(table, s), Layout(s.key, floor)))
+}
+
+object Layout {
+  private def by(key: String, floor: Int = 32, sides: Seq[Side] = Nil) =
+    Layout(Some(key), floor, sides)
+
+  /** Unbucketed parquet table — the layout of standalone centroid
+    * tables, monitor reference counts
+    * ([[graft.streaming.StreamingMonitor.referenceCounts]]), learned BPE
+    * merges ([[graft.operators.Bpe.mergeTable]]) and the matryoshka
+    * prefix layout ([[graft.operators.Similarity.withPrefix]]). */
+  val Plain = Layout(None)
+  /** QAN wide rows bucketed by `digest`: per-digest aggregates and joins
+    * need no exchange. One unpartitioned table — a caller wanting the
+    * `q_date` column adds it; date partitioning is
+    * [[Warehouse.writePartitioned]]'s layout. */
+  val Digest = by("digest")
+  /** Sign-LSH bucket rows ([[graft.operators.Similarity.annBucketFrame]]:
+    * `(id, emb, table, key)`). */
+  val Ann = by("key")
+  /** SimHash band rows ([[graft.operators.Dedup.simHashBandFrame]]:
+    * `(id, sh, band, key)`); the banded self-join reads both sides
+    * pre-distributed on `key`. */
+  val SimHash = by("key")
+  /** MinHash band rows ([[graft.operators.Dedup.minHashBandFrame]]) plus
+    * shingles bucketed by `idCol`. The signature is stateless
+    * (seed-derived), so appending batch-encoded frames is the entire
+    * incremental story. */
+  def minHash(idCol: String = "doc_id"): Layout =
+    by("key", sides = Seq(Side.Shingles.copy(key = Some(idCol))))
+  /** Inverted index: distinct `(doc_id, token)` postings
+    * ([[graft.operators.Search.postings]]). */
+  val Inverted = by("token")
+  /** Winnowing fingerprints `(doc_id, fp_hash)` after the df screen
+    * ([[graft.operators.Dedup.winnowingFingerprints]]); selection is
+    * per-document, so appended batches compose exactly. */
+  val Winnow = by("fp_hash")
+  /** Char-trigram postings `(doc_id, gram)`
+    * ([[graft.operators.Search.trigramPostings]]); duplicate grams
+    * across appends are absorbed by the searcher's per-doc distinct. */
+  val Trigram = by("gram")
+  /** Mergeable rollup partials ([[graft.operators.Rollup.dailyPartials]]):
+    * blind appends, merged on read exchange-free
+    * ([[graft.operators.Rollup.finalizeRollup]]). */
+  val Rollup = by("day", 8)
+  /** Per-domain admitted-count partials `(reg_domain, n, batch_id)`
+    * ([[graft.streaming.StreamingDedup.admitBatchDomainCap]]). batch_id
+    * >= 0 is RESERVED for admission rounds (the committed-probe treats a
+    * present non-negative stamp as proof that round committed);
+    * caller-seeded history must use NEGATIVE stamps, which always sum
+    * on read and are never probed. */
+  val DomainCounts = by("reg_domain", 8)
+  /** Canonical-URL keys `(<id>, url_key)`
+    * ([[graft.streaming.StreamingDedup.urlDedupAdmission]]); the id
+    * rides along for the crash-recovery presence probe. */
+  val UrlKeys = by("url_key")
+  /** Capped lexical tf `(doc_id, tok, tf)`
+    * ([[graft.operators.Dedup.cappedLexicalTf]]) plus squared norms over
+    * the same capped vectors, so stored probes score the exact cosine of
+    * what was indexed. */
+  val Lexical = by("tok", sides = Seq(Side.Norms))
+  /** Naive Bayes count partials `(_lab, tok, c)`
+    * ([[graft.operators.TextAnalysis.naiveBayesFit]]) plus per-label
+    * partials. Both are additive, so append + merge-on-read is exactly a
+    * retrain on the union; the derived `_params` keeps |V| in step. */
+  val NaiveBayes = by("tok", sides = Seq(Side.Labels, Side.NbParams))
+  /** IVF cell rows ([[graft.operators.Similarity.ivfIndex]]:
+    * `(id, emb, cell)`) plus the nlist-row centroid model. */
+  val Ivf = by("cell", 16, Seq(Side.Centroids))
+  /** PQ codes `(id, sub, code)` ([[graft.operators.Similarity.pqIndex]])
+    * plus codebook. No pruning key — an ADC query scans every code row;
+    * the win is size. Codes bucket by `id` so the re-rank co-locates
+    * with an id-bucketed corpus. */
+  val Pq = by("id", sides = Seq(Side.Codebook))
+  /** SQ8 codes `(id, code)` ([[graft.operators.Similarity.sq8Index]])
+    * plus the one-row `(mins, scales)` params the probe crossJoins. */
+  val Sq8 = by("id", sides = Seq(Side.Params))
+  /** IVF-PQ residual codes `(id, cell, sub, code)`
+    * ([[graft.operators.Similarity.ivfPqIndex]]) plus centroids and
+    * residual codebook: IVF's read-WHERE pruning with PQ's read-WHAT
+    * compression. */
+  val IvfPq = by("cell", 16, Seq(Side.Centroids, Side.Codebook))
+}
+
+/**
+ * The warehouse layouts from SCALE.md §2: the date-partitioned wide
+ * table ([[writePartitioned]]) and every bucketed or plain at-rest
+ * family, written through one [[save]] / [[append]] / [[drop]] path
+ * driven by the family's [[Layout]].
  */
 object Warehouse {
 
@@ -15,64 +156,52 @@ object Warehouse {
     * the small index-row shapes saved here (band/code/posting/tf rows,
     * 20–40 B each) — inside the guide-§6 128 MB–1 GB file-size window. */
   private val RowsPerBucket = 4L * 1000 * 1000
+  private val MaxBuckets = 1024
 
   /**
-   * Scale-adaptive bucket count (r16 verdict item 3; guide §6 file
-   * sizing + §2.2 fewer-larger partitions): the caller's `buckets` is
-   * the FLOOR — the historical local layout — and the count GROWS with
-   * the frame so per-bucket files stay near [[RowsPerBucket]], capped
-   * at 1024. Resolution order:
+   * Scale-adaptive bucket count for a NEW table (guide §6 file sizing +
+   * §2.2 fewer-larger partitions). Resolution order:
    *
    *  1. `spark.graft.buckets` session conf — the cluster submission's
-   *     explicit posture (a 100 TB corpus whose band frame carries
-   *     ~10¹¹ rows wants the 1024 cap; a 1 TB one ~256);
+   *     explicit posture, taken as given (any integer in 1..1024; a
+   *     100 TB corpus whose band frame carries ~10¹¹ rows wants the
+   *     1024 cap, a 1 TB one ~256);
    *  2. the optimizer's ROW-COUNT stats when present (analyzed upstream
-   *     tables / range-shaped sources) — `rows / RowsPerBucket`;
-   *     size-only estimates are deliberately ignored (they inflate
-   *     multiplicatively through joins and explodes, and a spurious
-   *     1024-way local layout would be a silent regression);
+   *     tables / range-shaped sources) — `rows / RowsPerBucket`, never
+   *     below the layout's `floor`, capped at 1024; size-only estimates
+   *     are deliberately ignored (they inflate multiplicatively through
+   *     joins and explodes);
    *  3. the floor — raw-parquet local runs land here, so the bench
    *     layout is byte-identical to every prior round.
    *
    * Bucket-count changes never break probes: bucket pruning and
    * exchange-free joins key off the CATALOG spec of the table actually
-   * written, and appends follow the stored spec (see
-   * [[bucketsOfOrElse]]).
+   * written, and appends follow the stored spec.
    */
-  private[sources] def adaptiveBuckets(df: DataFrame, floor: Int): Int = {
-    val cap = 1024
+  private[sources] def adaptiveBuckets(df: DataFrame, floor: Int): Int =
     df.sparkSession.conf.getOption("spark.graft.buckets") match {
-      case Some(b) => math.max(floor, math.min(cap, b.toInt))
+      case Some(b) =>
+        val n = b.trim.toIntOption.filter(n => n >= 1 && n <= MaxBuckets)
+        n.getOrElse(throw new IllegalArgumentException(
+          s"spark.graft.buckets must be an integer in 1..$MaxBuckets, got '$b'"))
       case None =>
         df.queryExecution.optimizedPlan.stats.rowCount
-          .map(r => (r / RowsPerBucket).min(cap).max(floor).toInt)
+          .map(r => (r / RowsPerBucket).min(MaxBuckets).max(floor).toInt)
           .getOrElse(floor)
     }
-  }
 
-  /** Bucket count an APPEND must use: the stored table's catalog spec
-    * when it exists (an append computed from a small batch frame must
-    * match the layout the original — possibly adaptive — save chose;
-    * Spark rejects mismatches loudly, this resolves them correctly),
-    * else the caller's count (append-creates). */
-  private def bucketsOfOrElse(spark: SparkSession, table: String,
-                              fallback: Int): Int = {
+  /** The one bucket rule: an existing table keeps its stored catalog
+    * spec (an append computed from a small batch must match the layout
+    * its original — possibly adaptive — save chose; Spark rejects a
+    * mismatch), a new table sizes by [[adaptiveBuckets]]. */
+  private def numBuckets(df: DataFrame, table: String, floor: Int): Int = {
+    val spark = df.sparkSession
     val cat = spark.sessionState.catalog
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    if (cat.tableExists(ident))
-      cat.getTableMetadata(ident).bucketSpec.map(_.numBuckets)
-        .getOrElse(fallback)
-    else fallback
+    Some(ident).filter(cat.tableExists)
+      .flatMap(cat.getTableMetadata(_).bucketSpec).map(_.numBuckets)
+      .getOrElse(adaptiveBuckets(df, floor))
   }
-
-  /** One resolution rule for every bucketed saver: Append follows the
-    * stored catalog spec; Overwrite sizes adaptively with the caller's
-    * count as floor. */
-  private def resolveBuckets(df: DataFrame, table: String, caller: Int,
-                             mode: SaveMode): Int =
-    if (mode == SaveMode.Append)
-      bucketsOfOrElse(df.sparkSession, table, caller)
-    else adaptiveBuckets(df, caller)
 
   /** Write the wide table date-partitioned: `.../q_date=YYYY-MM-DD/`.
     * Time-ranged readers prune whole partitions (verified in the spec
@@ -113,56 +242,51 @@ object Warehouse {
     }
   }
 
-  /** Append one table of a (possibly multi-table) index with the
-    * standard bucketed layout — the admission crash-recovery path's
-    * surgical repair (append only the table the crash cut off; a full
-    * re-append of a two-table index would duplicate the committed
-    * half's rows). Append-creates the table if it does not exist. */
-  private[graft] def appendBucketedTable(df: DataFrame, table: String,
-                                         bucketCol: String,
-                                         buckets: Int): Unit =
-    df.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOfOrElse(df.sparkSession, table, buckets), bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
+  /** Name of a family's side table: `<table><suffix>`. */
+  def sideTable(table: String, side: Side): String = table + side.suffix
 
-  /**
-   * Register the wide table as a digest-bucketed, date-partitioned
-   * managed table: per-digest aggregation over it needs no shuffle
-   * (bucketing pre-distributes by digest), which is the dominant QAN
-   * access path. Requires a session with a warehouse dir (any local or
-   * cluster metastore).
-   */
-  def saveBucketed(wide: DataFrame, table: String, buckets: Int = 32,
-                   mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) dropWithLocation(wide.sparkSession, table)
-    wide.withColumn("q_date", to_date(col("ts")))
-      .write.mode(mode)
-      .bucketBy(resolveBuckets(wide, table, buckets, mode), "digest")
-      .sortBy("digest")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  /** Drop every table of a family (main + sides), orphans included. */
+  def drop(spark: SparkSession, layout: Layout, table: String): Unit =
+    layout.parts(table).foreach(p => dropWithLocation(spark, p._1))
 
-  /**
-   * Persist an ANN LSH bucket frame
-   * ([[graft.operators.Similarity.annBucketFrame]]: `(id, emb, table,
-   * key)`) bucketed by `key` — the SCALE.md §5 "index as a table layout":
-   * a probe lookup filtering on its bucket keys scans only the matching
-   * file buckets (`SelectedBucketsCount` in the plan), never the whole
-   * corpus. `sortBy(key)` keeps same-bucket runs contiguous for the
-   * within-file scan.
-   */
-  def saveAnnIndex(bucketFrame: DataFrame, table: String, buckets: Int = 32,
-                   mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(bucketFrame.sparkSession, table)
-    bucketFrame.write.mode(mode)
-      .bucketBy(resolveBuckets(bucketFrame, table, buckets, mode), "key")
-      .sortBy("key")
-      .format("parquet")
-      .saveAsTable(table)
+  /** Overwrite a family: drop its tables, then write `main` and one
+    * frame per non-derived side, in `layout.sides` order, then the
+    * derived sides. Idempotent across JVMs. */
+  def save(layout: Layout, table: String, main: DataFrame,
+           sides: DataFrame*): Unit =
+    write(layout, table, main +: sides, SaveMode.Overwrite)(_.derive.isEmpty)
+
+  /** Grow a family by one batch: blind append of `main` and one frame
+    * per ADDITIVE side, in `layout.sides` order; model sides are never
+    * touched (new rows are encoded against them upstream), derived sides
+    * are recomputed. The standing table is never read or rewritten, so
+    * the cost is ∝ batch; each append lays down one more file per bucket
+    * ([[compactTable]] folds them). A missing table is created; a
+    * missing table whose managed location survives from an earlier JVM
+    * fails with LOCATION_ALREADY_EXISTS rather than losing that data. */
+  def append(layout: Layout, table: String, main: DataFrame,
+             additive: DataFrame*): Unit =
+    write(layout, table, main +: additive, SaveMode.Append)(_.additive)
+
+  /** Write `frames` to the main table and the sides selected by `take`,
+    * in order (an overwrite first drops the whole family), then rewrite
+    * every derived side from the stored main. */
+  private def write(layout: Layout, table: String, frames: Seq[DataFrame],
+                    mode: SaveMode)(take: Side => Boolean): Unit = {
+    val parts = layout.parts(table)
+    val targets = parts.head +: parts.tail.zip(layout.sides)
+      .collect { case (p, s) if take(s) => p }
+    require(frames.size == targets.size, s"$mode $table: expected " +
+      s"${targets.size - 1} side frames, got ${frames.size - 1}")
+    val spark = frames.head.sparkSession
+    if (mode == SaveMode.Overwrite) drop(spark, layout, table)
+    targets.zip(frames).foreach { case ((t, l), df) =>
+      val w = df.write.mode(mode).format("parquet")
+      l.key.fold(w)(k => w.bucketBy(numBuckets(df, t, l.floor), k).sortBy(k))
+        .saveAsTable(t)
+    }
+    for ((p, s) <- parts.tail.zip(layout.sides); f <- s.derive)
+      save(p._2, p._1, f(spark.table(table)))
   }
 
   /**
@@ -183,536 +307,6 @@ object Warehouse {
       s"FOR COLUMNS ${columns.mkString(", ")}")
   }
 
-  /**
-   * Persist a SimHash band frame
-   * ([[graft.operators.Dedup.simHashBandFrame]]: `(id, sh, band, key)`)
-   * bucketed by `key` — the text-near-dup twin of [[saveAnnIndex]]:
-   * a probe document's band keys become a bucket-pruned scan
-   * (`SelectedBucketsCount`), and the banded near-dup self-join reads
-   * both sides already hash-distributed on `key`, so the join needs no
-   * exchange (bucketing on a subset of the `(band, key)` join keys
-   * still satisfies its clustering). Index once, probe forever.
-   */
-  def saveSimHashIndex(bandFrame: DataFrame, table: String, buckets: Int = 32,
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(bandFrame.sparkSession, table)
-    bandFrame.write.mode(mode)
-      .bucketBy(resolveBuckets(bandFrame, table, buckets, mode), "key")
-      .sortBy("key")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /**
-   * Persist a MinHash-LSH index
-   * ([[graft.operators.Dedup.minHashBandFrame]]: `(id, band, key)`, plus
-   * the shingle frame [[graft.operators.Dedup.shingles]] the exact
-   * Jaccard verification consumes) — the fuzzy-dedup twin of
-   * [[saveSimHashIndex]]: bands bucket by `key` so a probe document's
-   * band keys become a bucket-pruned scan (`SelectedBucketsCount`) and
-   * the banded self-join reads both sides pre-distributed on `key`;
-   * shingles land in `<table>_shingles` bucketed by the id so the
-   * verify joins co-locate on their id keys. The signature model is
-   * stateless (seed-derived xxhash64 mins — no fit, no params table),
-   * so `SaveMode.Append` with batch-encoded frames is the entire
-   * incremental-maintenance story: nothing can drift, nothing can
-   * corrupt. Index once, probe forever.
-   */
-  def saveMinHashIndex(bandFrame: DataFrame, shingles: DataFrame,
-                       table: String, idCol: String = "doc_id",
-                       buckets: Int = 32,
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(bandFrame.sparkSession, table)
-      dropWithLocation(bandFrame.sparkSession, s"${table}_shingles")
-    }
-    bandFrame.write.mode(mode)
-      .bucketBy(resolveBuckets(bandFrame, table, buckets, mode), "key")
-      .sortBy("key")
-      .format("parquet")
-      .saveAsTable(table)
-    shingles.write.mode(mode)
-      .bucketBy(
-        resolveBuckets(shingles, s"${table}_shingles", buckets, mode), idCol)
-      .sortBy(idCol)
-      .format("parquet")
-      .saveAsTable(s"${table}_shingles")
-  }
-
-  /**
-   * Persist a posting frame ([[graft.operators.Search.postings]]:
-   * distinct `(doc_id, token)`) bucketed by `token` — the inverted
-   * index at rest, the lexical twin of [[saveSimHashIndex]]: a search
-   * touching k query terms scans only those terms' file buckets
-   * (`SelectedBucketsCount`), never the corpus postings, and
-   * [[graft.operators.Search.conjunctiveSearch]] consumes the stored
-   * table unchanged. `sortBy(token)` keeps each term's posting run
-   * contiguous inside its bucket.
-   */
-  def saveInvertedIndex(postings: DataFrame, table: String, buckets: Int = 32,
-                        mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(postings.sparkSession, table)
-    postings.write.mode(mode)
-      .bucketBy(resolveBuckets(postings, table, buckets, mode), "token")
-      .sortBy("token")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /**
-   * Persist a winnowing fingerprint frame
-   * ([[graft.operators.Dedup.winnowingFingerprints]] after the
-   * df screen: distinct `(doc_id, fp_hash)`) bucketed by `fp_hash` —
-   * the THIRTEENTH at-rest family, the MOSS-style match index: a probe
-   * batch's selected hashes join the stored side pre-distributed on
-   * the hash (the batch side shuffles, the standing table never does),
-   * and growing the corpus is [[appendWinnowIndex]] — a blind bucketed
-   * append (selection is per-document and stateless, so appended
-   * batches screened under the same df discipline compose exactly).
-   */
-  def saveWinnowIndex(selected: DataFrame, table: String, buckets: Int = 32,
-                      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(selected.sparkSession, table)
-    selected.write.mode(mode)
-      .bucketBy(resolveBuckets(selected, table, buckets, mode), "fp_hash")
-      .sortBy("fp_hash")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Grow a stored winnowing index by one batch's selected fingerprints
-    * — blind bucketed append (`buckets` must match the original save). */
-  def appendWinnowIndex(selected: DataFrame, table: String,
-                        buckets: Int = 32): Unit =
-    appendBucketedTable(selected, table, "fp_hash", buckets)
-
-  /**
-   * Persist a char-trigram posting frame
-   * ([[graft.operators.Search.trigramPostings]]: distinct
-   * `(doc_id, gram)`) bucketed by `gram` — the substring-search index
-   * at rest (the pg_trgm analog of [[saveInvertedIndex]]): a
-   * `%pattern%` probe touches only its own trigrams' file buckets
-   * (`SelectedBucketsCount`), never the corpus postings. Admitting new
-   * docs is [[appendTrigramIndex]] — a blind bucketed append, the
-   * standing table never read or rewritten (the rollup/index-append
-   * discipline; duplicate grams across batches are harmless, the
-   * searcher's per-doc distinct absorbs them).
-   */
-  def saveTrigramIndex(postings: DataFrame, table: String, buckets: Int = 32,
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(postings.sparkSession, table)
-    postings.write.mode(mode)
-      .bucketBy(resolveBuckets(postings, table, buckets, mode), "gram")
-      .sortBy("gram")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Blind no-refit append of a new batch's trigram postings into a
-    * [[saveTrigramIndex]] table — cost ∝ batch, flat in the standing
-    * index size. */
-  def appendTrigramIndex(postings: DataFrame, table: String,
-                         buckets: Int = 32): Unit =
-    saveTrigramIndex(postings, table, buckets, SaveMode.Append)
-
-  /**
-   * Persist an aggregate rollup of MERGEABLE PARTIALS
-   * ([[graft.operators.Rollup.dailyPartials]]: `(day, event_type, cnt,
-   * sum_v, min_v, max_v)`) bucketed by `day`. Appending a batch's
-   * partials is a blind bucketed write — the standing table is never
-   * read, never rewritten; duplicate partial rows per key are merged on
-   * read by [[graft.operators.Rollup.finalizeRollup]], whose aggregate
-   * runs exchange-free off the bucketed scan (partitioning on `day`
-   * satisfies the (day, event_type) clustering). Incremental cost ∝
-   * batch; read cost ∝ keys × batches (compact via [[compactTable]]
-   * when append history accumulates).
-   */
-  def saveRollup(partials: DataFrame, table: String, buckets: Int = 8,
-                 mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(partials.sparkSession, table)
-    partials.write.mode(mode)
-      .bucketBy(resolveBuckets(partials, table, buckets, mode), "day")
-      .sortBy("day")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /**
-   * Persist per-domain admitted-count PARTIALS
-   * `(reg_domain, n, batch_id)` bucketed by domain — the q201 rollup
-   * discipline applied to the domain-cap admission axis
-   * ([[graft.streaming.StreamingDedup.admitBatchDomainCap]]): appends
-   * are blind (the standing table is never read at write time), and a
-   * replayed batch collapses via its batch_id stamp when the counts
-   * merge on read. Bucketing by `reg_domain` keeps the merge
-   * aggregate exchange-free off the scan.
-   *
-   * Stamp namespace contract (see
-   * [[graft.streaming.StreamingDedup.domainCountsOf]]): batch_id >= 0
-   * is RESERVED for admission rounds — the admission's committed-probe
-   * treats a present non-negative stamp as proof that round committed,
-   * so a caller SEEDING history here with batch_id 0 would silently
-   * swallow structured streaming's first micro-batch (bids start at
-   * 0). Direct caller-seeded history must use NEGATIVE stamps (e.g.
-   * -1, or -(i+1) per synthetic past batch); negative-stamp rows
-   * always sum on read and are never probed.
-   */
-  def saveDomainCounts(partials: DataFrame, table: String,
-                       buckets: Int = 8,
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(partials.sparkSession, table)
-    partials.write.mode(mode)
-      .bucketBy(resolveBuckets(partials, table, buckets, mode), "reg_domain")
-      .sortBy("reg_domain")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /**
-   * Persist canonical-URL keys `(<id>, url_key)` bucketed by the key —
-   * the stored half of URL-level exact dedup
-   * ([[graft.streaming.StreamingDedup.urlDedupAdmission]]): a probe
-   * batch's anti-join shuffles only the batch side (the standing scan
-   * is bucket-partitioned on `url_key`). Stateless like the trigram
-   * saver — keys are content-derived, so blind Append is safe; the id
-   * column rides along for the crash-recovery presence probe.
-   */
-  def saveUrlKeyIndex(keys: DataFrame, table: String,
-                      buckets: Int = 32,
-                      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(keys.sparkSession, table)
-    keys.write.mode(mode)
-      .bucketBy(resolveBuckets(keys, table, buckets, mode), "url_key")
-      .sortBy("url_key")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /**
-   * Persist a lexical cosine index: the CAPPED tf frame
-   * ([[graft.operators.Dedup.cappedLexicalTf]]: `(doc_id, tok, tf)`)
-   * bucketed by token — a probe batch's candidate join shuffles only
-   * the batch side — plus the squared norms (`<table>_norms`, computed
-   * over the SAME capped vectors so stored probes score the exact
-   * cosine of what was indexed). Stateless like the MinHash saver:
-   * nothing is fitted, so Append is safe for batches whose tokens
-   * respect the original cap semantics (admission appends survivors).
-   */
-  def saveLexicalIndex(cappedTf: DataFrame, norms: DataFrame, table: String,
-                       buckets: Int = 32,
-                       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(cappedTf.sparkSession, table)
-      dropWithLocation(cappedTf.sparkSession, s"${table}_norms")
-    }
-    cappedTf.write.mode(mode)
-      .bucketBy(resolveBuckets(cappedTf, table, buckets, mode), "tok")
-      .sortBy("tok")
-      .format("parquet")
-      .saveAsTable(table)
-    norms.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_norms")
-  }
-
-  /**
-   * Persist a Naive Bayes model at rest — the TWELFTH at-rest family,
-   * and the first that is a trained MODEL rather than an index: the
-   * per-(label, token) count partials
-   * ([[graft.operators.TextAnalysis.naiveBayesFit]]: `(_lab, tok, c)`)
-   * bucketed by `tok` (scoring joins test postings on token — the
-   * stored side never shuffles) plus the per-label partials
-   * (`<table>_labels`: `(_lab, tot, n_docs)`) as a plain table.
-   *
-   * Both frames are pure ADDITIVE partials (the q201 rollup
-   * discipline), so [[appendNbModel]]'s blind Append + the scorer's
-   * merge-on-read is EXACTLY a retrain on the union — incremental
-   * model updates with no refit and no approximation (spec-pinned:
-   * half+half append ≡ one-shot fit).
-   *
-   * Alongside, a ONE-ROW `<table>_params` `(vocab_size)` — the SQ8
-   * `_params` pattern — records |V| at write time so every serve
-   * ([[graft.operators.TextAnalysis.naiveBayesScoreStored]]) skips a
-   * full distinct-count pass over the standing count table. Vocab is
-   * NOT additive (appended batches share tokens), so [[appendNbModel]]
-   * recomputes it over the merged stored table once per append —
-   * write-time cost, paid once, instead of a serve-time scan paid on
-   * every classification call.
-   */
-  def saveNbModel(counts: DataFrame, labelStats: DataFrame, table: String,
-                  buckets: Int = 32,
-                  mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(counts.sparkSession, table)
-      dropWithLocation(counts.sparkSession, s"${table}_labels")
-      dropWithLocation(counts.sparkSession, s"${table}_params")
-    }
-    counts.write.mode(mode)
-      .bucketBy(resolveBuckets(counts, table, buckets, mode), "tok")
-      .sortBy("tok")
-      .format("parquet")
-      .saveAsTable(table)
-    labelStats.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_labels")
-    writeNbParams(counts.sparkSession, table)
-  }
-
-  /** Recompute the one-row NB `_params` table `(vocab_size)` from the
-    * stored count table — called by [[saveNbModel]]/[[appendNbModel]]
-    * after every write so serves never scan for |V|. Reads the
-    * tok-bucketed table (distinct on the bucket key — no shuffle of
-    * the stored side) and overwrites the one-row result. */
-  private def writeNbParams(spark: SparkSession, table: String): Unit = {
-    val vocab = spark.table(table)
-      .agg(count_distinct(col("tok")).as("vocab_size"))
-    dropWithLocation(spark, s"${table}_params")
-    vocab.write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(s"${table}_params")
-  }
-
-  /** Persist a centroid table (`(label, centroid)` — k rows, e.g.
-    * [[graft.operators.TextAnalysis]]-adjacent
-    * [[graft.operators.Similarity.kMediansCentroids]] or
-    * `medianCentroids`) as a plain table: the standalone twin of the
-    * IVF saver's `_centroids` side table, for fit-once /
-    * assign-forever routing without a refit. */
-  def saveCentroids(centroids: DataFrame, table: String,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    savePlainTable(centroids, table, mode)
-
-  /** Persist a monitor reference-distribution count frame
-    * ([[graft.streaming.StreamingMonitor.referenceCounts]]:
-    * `(group, units, c)`) as a plain table. The counts are additive
-    * partials (the q201 rule) — Append re-arms the streaming monitor
-    * with more baseline mass, no rebuild, and the weighted-KS scorer
-    * merges on read. */
-  def saveReferenceCounts(counts: DataFrame, table: String,
-                          mode: SaveMode = SaveMode.Overwrite): Unit =
-    savePlainTable(counts, table, mode)
-
-  /** Persist a learned BPE merge table
-    * ([[graft.operators.Bpe.mergeTable]]: rank-ordered
-    * `(rnk, ml, mr, cnt)`) — the tokenizer model at rest; serving
-    * replays it as one chained-replace projection
-    * ([[graft.operators.Bpe.applyStats]]), never re-learning. */
-  def saveBpeMerges(merges: DataFrame, table: String,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    savePlainTable(merges, table, mode)
-
-  private def savePlainTable(df: DataFrame, table: String,
-                             mode: SaveMode): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(df.sparkSession, table)
-    df.write.mode(mode).format("parquet").saveAsTable(table)
-  }
-
-  /**
-   * Persist an embedding corpus in the MRL/matryoshka serving layout:
-   * the first `prefixDim` coordinates materialized as their own
-   * `pre` column beside the full vector, so a truncated-dimension
-   * first pass ([[graft.operators.Similarity.matryoshkaTopKStored]])
-   * reads prefixDim/dim of the vector bytes via plain Parquet column
-   * pruning — the layout lever SCALE.md §20 names. Append is safe
-   * (per-row derived column, nothing fitted).
-   */
-  def saveEmbeddingsWithPrefix(emb: DataFrame, idCol: String,
-                               embCol: String, prefixDim: Int,
-                               table: String,
-                               mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      dropWithLocation(emb.sparkSession, table)
-    emb.select(col(idCol), col(embCol),
-        slice(col(embCol), 1, prefixDim).as("pre"))
-      .write.mode(mode).format("parquet").saveAsTable(table)
-  }
-
-  /** Grow a stored NB model by one batch's count partials — blind
-    * Append on both tables (additive semantics; `buckets` must match
-    * the original save), then refresh the one-row `_params` vocab
-    * count over the merged table (|V| is not additive across batches;
-    * recomputing at append time keeps serves scan-free). */
-  def appendNbModel(counts: DataFrame, labelStats: DataFrame,
-                    table: String, buckets: Int = 32): Unit = {
-    appendBucketedTable(counts, table, "tok", buckets)
-    labelStats.write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_labels")
-    writeNbParams(counts.sparkSession, table)
-  }
-
-  /**
-   * Persist an IVF cell frame
-   * ([[graft.operators.Similarity.ivfIndex]]: `(id, emb, cell)`)
-   * bucketed by `cell` — the inverted file at rest: a probe touching
-   * its `nprobe` nearest cells scans only those cells' file buckets
-   * (`SelectedBucketsCount`), never the corpus. The companion centroid
-   * table (nlist rows) is written as a plain table alongside,
-   * `<table>_centroids`.
-   */
-  def saveIvfIndex(cells: DataFrame, centroids: DataFrame, table: String,
-                   buckets: Int = 16,
-                   mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(cells.sparkSession, table)
-      dropWithLocation(cells.sparkSession, s"${table}_centroids")
-    }
-    cells.write.mode(mode)
-      .bucketBy(resolveBuckets(cells, table, buckets, mode), "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-    centroids.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_centroids")
-  }
-
-  /**
-   * Persist a PQ code index
-   * ([[graft.operators.Similarity.pqIndex]]: codes `(id, sub, code)` +
-   * codebook `(sub, code, centroid)`, written as `<table>` and
-   * `<table>_codebook`). No pruning key — an ADC query scans every
-   * code row by design; the at-rest win is SIZE (subspaces small ints
-   * per vector, ~32× under the raw embeddings). Codes are bucketed by
-   * `id` so the post-ADC candidate re-rank can co-locate with an
-   * id-bucketed corpus table without an exchange.
-   */
-  def savePqIndex(codes: DataFrame, codebook: DataFrame, table: String,
-                  buckets: Int = 32,
-                  mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(codes.sparkSession, table)
-      dropWithLocation(codes.sparkSession, s"${table}_codebook")
-    }
-    codes.write.mode(mode)
-      .bucketBy(resolveBuckets(codes, table, buckets, mode), "id")
-      .sortBy("id")
-      .format("parquet")
-      .saveAsTable(table)
-    codebook.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_codebook")
-  }
-
-  /**
-   * Persist an SQ8 scalar-quantized index
-   * ([[graft.operators.Similarity.sq8Index]]: codes `(id, code)` +
-   * a ONE-ROW params table `(mins, scales)`, `<table>_params`) — the
-   * PQ layout's training-free sibling: no pruning key (a probe scans
-   * every code row by design), the at-rest win is SIZE (one int per
-   * dimension vs a float — and int codes ≤255 dictionary/bit-pack far
-   * below 4 bytes in parquet). Codes bucket by `id` for the exact
-   * re-rank co-location, like [[savePqIndex]]. Appending new rows
-   * needs no helper: encode against the stored params
-   * (`sq8Index`'s arithmetic is stateless given params) and
-   * `saveSq8Index(..., SaveMode.Append)` leaves the params table
-   * untouched only when told to — use mode Append and skip the params
-   * write via `writeParams = false`.
-   */
-  def saveSq8Index(codes: DataFrame, params: DataFrame, table: String,
-                   buckets: Int = 32,
-                   mode: SaveMode = SaveMode.Overwrite,
-                   writeParams: Boolean = true): Unit = {
-    // An Append that also appends params would leave a 2-row params
-    // table; sq8CosineTopKFrom crossJoins it, silently duplicating every
-    // candidate. Fail fast instead of relying on the docstring.
-    require(mode != SaveMode.Append || !writeParams,
-      "saveSq8Index: Append must pass writeParams = false (the params " +
-        "table is one-row by contract; appending would corrupt probes)")
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(codes.sparkSession, table)
-      if (writeParams) dropWithLocation(codes.sparkSession, s"${table}_params")
-    }
-    codes.write.mode(mode)
-      .bucketBy(resolveBuckets(codes, table, buckets, mode), "id")
-      .sortBy("id")
-      .format("parquet")
-      .saveAsTable(table)
-    if (writeParams)
-      params.write.mode(mode).format("parquet")
-        .saveAsTable(s"${table}_params")
-  }
-
-  // ── Incremental index maintenance ─────────────────────────────────────
-  //
-  // At 100 TB an index is NEVER rebuilt for a daily batch: new rows are
-  // encoded against the EXISTING model (LSH/SimHash are stateless
-  // seed-derived hashes; IVF/PQ encode with the stored centroids/codebook
-  // via Similarity.ivfAssign / Similarity.pqEncode) and their index rows
-  // appended to the bucketed table. `bucketBy` + Append verifies the
-  // bucket spec against the catalog, so an append can't silently degrade
-  // the layout — Spark rejects a mismatched bucket count. LSH and SimHash
-  // appends need no dedicated helper (saveAnnIndex/saveSimHashIndex with
-  // SaveMode.Append ARE the append path); IVF/PQ need these two because
-  // their Overwrite savers also rewrite the model tables, which an append
-  // must leave untouched.
-
-  /** Append already-assigned cell rows ([[graft.operators.Similarity.ivfAssign]])
-    * to a stored IVF index, leaving `<table>_centroids` untouched. */
-  def appendIvfIndex(cells: DataFrame, table: String,
-                     buckets: Int = 16): Unit =
-    cells.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOfOrElse(cells.sparkSession, table, buckets), "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Append already-encoded code rows ([[graft.operators.Similarity.pqEncode]])
-    * to a stored PQ index, leaving `<table>_codebook` untouched. */
-  def appendPqIndex(codes: DataFrame, table: String,
-                    buckets: Int = 32): Unit =
-    codes.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOfOrElse(codes.sparkSession, table, buckets), "id")
-      .sortBy("id")
-      .format("parquet")
-      .saveAsTable(table)
-
-  /**
-   * Persist an IVF-PQ composite index
-   * ([[graft.operators.Similarity.ivfPqIndex]]: codes
-   * `(id, cell, sub, code)` + centroids `(cell, centroid)` +
-   * residual codebook `(sub, code, centroid)`, written as `<table>`,
-   * `<table>_centroids`, `<table>_codebook`). Codes bucket by `cell` —
-   * the pruning key: a probe's nprobe cell lookups become bucket-pruned
-   * scans, and the rows they read are `subspaces` small ints per
-   * vector, so the at-rest index combines IVF's read-WHERE pruning with
-   * PQ's read-WHAT compression — the only posture that holds when
-   * neither the corpus nor a cell's embeddings fit a scan budget.
-   */
-  def saveIvfPqIndex(codes: DataFrame, centroids: DataFrame,
-                     codebook: DataFrame, table: String,
-                     buckets: Int = 16,
-                     mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite) {
-      dropWithLocation(codes.sparkSession, table)
-      dropWithLocation(codes.sparkSession, s"${table}_centroids")
-      dropWithLocation(codes.sparkSession, s"${table}_codebook")
-    }
-    codes.write.mode(mode)
-      .bucketBy(resolveBuckets(codes, table, buckets, mode), "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-    centroids.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    codebook.write.mode(mode).format("parquet")
-      .saveAsTable(s"${table}_codebook")
-  }
-
-  /** Append already-encoded code rows
-    * ([[graft.operators.Similarity.ivfPqEncode]] against the stored
-    * centroid + codebook tables) to a stored IVF-PQ index, leaving both
-    * quantizer tables untouched. */
-  def appendIvfPqIndex(codes: DataFrame, table: String,
-                       buckets: Int = 16): Unit =
-    codes.write.mode(SaveMode.Append)
-      .bucketBy(bucketsOfOrElse(codes.sparkSession, table, buckets), "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Data files currently under a table's location (parquet parts only —
     * excludes _SUCCESS and metadata). The observability half of
     * [[compactTable]]. */
@@ -731,7 +325,7 @@ object Warehouse {
    * Compact a managed table in place, preserving its bucket/sort/partition
    * spec. Every `Append` to a bucketed table lays down one MORE file per
    * bucket, so a streaming admission loop ([[graft.streaming.StreamingDedup]])
-   * or daily [[appendIvfIndex]]/[[appendPqIndex]] batch grows k files per
+   * or daily [[append]] of an IVF/PQ batch grows k files per
    * bucket after k appends — and at 100 TB the small-files problem is a
    * real scan-cost and NameNode/listing tax (every probe opens k footers
    * per selected bucket instead of 1). The rewrite reads the table once,

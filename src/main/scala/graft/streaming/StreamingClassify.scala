@@ -8,11 +8,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /**
  * Stream-side model serving: classify a streamed document corpus
  * against the at-rest Naive Bayes model
- * ([[graft.sources.Warehouse.saveNbModel]]) — the train-offline /
+ * ([[graft.sources.Layout.NaiveBayes]]) — the train-offline /
  * serve-on-the-stream half of q241/q242. Each micro-batch runs the
  * batch scorer ([[TextAnalysis.naiveBayesScoreFrom]]) against the
- * stored tables, so a model update ([[graft.sources.Warehouse
- * .appendNbModel]] between triggers) is picked up by the NEXT batch
+ * stored tables, so a model update ([[graft.sources.Warehouse.append]]
+ * between triggers) is picked up by the NEXT batch
  * with no query restart — the merge-on-read scorer sees whatever
  * partials are in the table when the batch fires.
  *
@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * counts (the stored side never shuffles) + one batch-keyed aggregate;
  * the label-stats collect is label-cardinality-bounded. Nothing about
  * the standing model is recomputed per trigger — |V| reads from the
- * one-row `_params` table the saver maintains (r14: the former
+ * one-row `_params` table the layout derives (r14: the former
  * per-trigger vocabulary distinct was a standing-table scan per serve).
  */
 object StreamingClassify {
@@ -50,7 +50,7 @@ object StreamingClassify {
   /**
    * The clustering twin of [[nbServe]]: route each micro-batch of
    * vectors against the stored centroid table
-   * ([[graft.sources.Warehouse.saveCentroids]] — fit once offline,
+   * ([[graft.sources.Layout.Plain]] — fit once offline,
    * e.g. [[graft.operators.Similarity.kMediansCentroids]]). The
    * per-trigger cost is ONE shuffle-free unrolled projection over the
    * batch (centroids collect k rows); a centroid refresh between

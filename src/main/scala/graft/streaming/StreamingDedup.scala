@@ -3,7 +3,7 @@ package graft.streaming
 import scala.util.Try
 
 import graft.operators.Dedup
-import graft.sources.Warehouse
+import graft.sources.{Layout, Warehouse}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * Online near-duplicate ADMISSION CONTROL — the shape a 100 TB training
  * corpus actually ingests through: documents arrive as a stream, and a
  * document is admitted only if nothing like it has been admitted
- * before. The at-rest SimHash index ([[graft.sources.Warehouse.saveSimHashIndex]])
+ * before. The at-rest SimHash index ([[graft.sources.Layout.SimHash]])
  * is both the memory and the output: each micro-batch probes it, and
  * the survivors' band rows are appended so later batches (and every
  * other consumer of the index) see them immediately.
@@ -162,10 +162,6 @@ object StreamingDedup {
       !t.join(ids, t(tableIdCol) === ids(idCol), "left_semi").isEmpty
     }
 
-  private def appendModeFor(spark: SparkSession, table: String): SaveMode =
-    if (spark.catalog.tableExists(table)) SaveMode.Append
-    else SaveMode.ErrorIfExists
-
   // ------------------------------------------------------------------
   // Axis 1: SimHash (structure)
   // ------------------------------------------------------------------
@@ -195,10 +191,8 @@ object StreamingDedup {
     // index rows derive from whatever survivor frame the commit hands
     // over (live or manifest-read) — stateless encode, cannot drift
     def appendIdx(s: DataFrame): Unit =
-      Warehouse.saveSimHashIndex(
-        Dedup.simHashBandFrame(s, idCol, split(col(textCol), " ")),
-        indexTable, buckets = indexBuckets,
-        mode = appendModeFor(spark, indexTable))
+      Warehouse.append(Layout.SimHash.copy(floor = indexBuckets), indexTable,
+        Dedup.simHashBandFrame(s, idCol, split(col(textCol), " ")))
     def ensureIdx(s: DataFrame): Unit =
       if (!indexHasIds(spark, indexTable, s.select(idCol), idCol, idCol))
         appendIdx(s)
@@ -243,7 +237,7 @@ object StreamingDedup {
 
   /**
    * MinHash-LSH admission — [[simHashAdmission]]'s Jaccard twin over the
-   * at-rest MinHash index ([[graft.sources.Warehouse.saveMinHashIndex]]):
+   * at-rest MinHash index ([[graft.sources.Layout.minHash]]):
    * a document is admitted only if no already-admitted document has
    * word-n-gram Jaccard ≥ `threshold` with it. Same four-step batch
    * shape (stateless encode → within-batch dedup → index probe →
@@ -271,13 +265,12 @@ object StreamingDedup {
                         indexBuckets: Int = 32,
                         batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    val shTable = s"${indexTable}_shingles"
+    val layout = Layout.minHash(idCol).copy(floor = indexBuckets)
+    val Seq((_, bandLayout), (shTable, shLayout)) = layout.parts(indexTable)
     def appendIdx(s: DataFrame): Unit = {
       val sh = Dedup.shingles(s, idCol, textCol, n)
-      Warehouse.saveMinHashIndex(
-        Dedup.minHashBandFrameFromShingles(sh, idCol), sh, indexTable,
-        idCol = idCol, buckets = indexBuckets,
-        mode = appendModeFor(spark, indexTable))
+      Warehouse.append(layout, indexTable,
+        Dedup.minHashBandFrameFromShingles(sh, idCol), sh)
     }
     // two tables, two commit points: repair each independently so a
     // crash between the band and shingle writes never double-appends
@@ -286,11 +279,10 @@ object StreamingDedup {
       val ids = s.select(idCol)
       lazy val sh = Dedup.shingles(s, idCol, textCol, n)
       if (!indexHasIds(spark, indexTable, ids, idCol, idCol))
-        Warehouse.appendBucketedTable(
-          Dedup.minHashBandFrameFromShingles(sh, idCol), indexTable,
-          "key", indexBuckets)
+        Warehouse.append(bandLayout, indexTable,
+          Dedup.minHashBandFrameFromShingles(sh, idCol))
       if (!indexHasIds(spark, shTable, ids, idCol, idCol))
-        Warehouse.appendBucketedTable(sh, shTable, idCol, indexBuckets)
+        Warehouse.append(shLayout, shTable, sh)
     }
     if (batchId.exists(recoverPartialCommit(spark, outPath, _, idCol, ensureIdx)))
       return
@@ -339,7 +331,7 @@ object StreamingDedup {
   /**
    * Lexical-cosine admission — the third member of the admission trio
    * (SimHash hamming, MinHash Jaccard, bag-of-words cosine), over the
-   * at-rest lexical index ([[graft.sources.Warehouse.saveLexicalIndex]]):
+   * at-rest lexical index ([[graft.sources.Layout.Lexical]]):
    * a document is admitted only if no already-admitted document has
    * exact tf-cosine ≥ `threshold` with it. Same four-step batch shape,
    * same exactly-once contract. The df cap is corpus-local by design:
@@ -369,14 +361,14 @@ object StreamingDedup {
                         indexBuckets: Int = 32,
                         batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    val normsTable = s"${indexTable}_norms"
+    val layout = Layout.Lexical.copy(floor = indexBuckets)
+    val Seq((_, tfLayout), (normsTable, normsLayout)) =
+      layout.parts(indexTable)
     // A doc with EMPTY text has no tf rows — admitted, unmatchable,
     // the per-row degrade contract.
     def appendIdx(s: DataFrame): Unit = {
       val sTf = Dedup.cappedLexicalTf(s, idCol, textCol, maxDf).persist()
-      try Warehouse.saveLexicalIndex(sTf, Dedup.lexicalNorms(sTf),
-        indexTable, buckets = indexBuckets,
-        mode = appendModeFor(spark, indexTable))
+      try Warehouse.append(layout, indexTable, sTf, Dedup.lexicalNorms(sTf))
       finally sTf.unpersist()
     }
     def ensureIdx(s: DataFrame): Unit = {
@@ -384,10 +376,9 @@ object StreamingDedup {
       val sTf = Dedup.cappedLexicalTf(s, idCol, textCol, maxDf).persist()
       try {
         if (!indexHasIds(spark, indexTable, ids, idCol, "doc_id"))
-          Warehouse.appendBucketedTable(sTf, indexTable, "tok", indexBuckets)
+          Warehouse.append(tfLayout, indexTable, sTf)
         if (!indexHasIds(spark, normsTable, ids, idCol, "doc_id"))
-          Dedup.lexicalNorms(sTf).write.mode(SaveMode.Append)
-            .format("parquet").saveAsTable(normsTable)
+          Warehouse.append(normsLayout, normsTable, Dedup.lexicalNorms(sTf))
       } finally sTf.unpersist()
     }
     if (batchId.exists(recoverPartialCommit(spark, outPath, _, idCol, ensureIdx)))
@@ -427,7 +418,7 @@ object StreamingDedup {
    * structure, MinHash = content, lexical = vocabulary, this =
    * MEANING): a document is admitted only if no admitted document's
    * EMBEDDING sits within `threshold` cosine, against the at-rest
-   * sign-LSH index ([[graft.sources.Warehouse.saveAnnIndex]] layout —
+   * sign-LSH index ([[graft.sources.Layout.Ann]] layout —
    * the bucket frame carries raw embeddings, so candidates from the
    * bucket-colocated join verify by EXACT cosine; admission is never
    * decided on a hash collision alone). The SemDeDup corpus posture,
@@ -464,10 +455,8 @@ object StreamingDedup {
     // null embeddings have no bucket rows — admitted, unmatchable,
     // the per-row degrade contract
     def appendIdx(s: DataFrame): Unit =
-      Warehouse.saveAnnIndex(
-        Similarity.annBucketFrame(s, idCol, embCol, tables, bits, dim),
-        indexTable, buckets = indexBuckets,
-        mode = appendModeFor(spark, indexTable))
+      Warehouse.append(Layout.Ann.copy(floor = indexBuckets), indexTable,
+        Similarity.annBucketFrame(s, idCol, embCol, tables, bits, dim))
     def ensureIdx(s: DataFrame): Unit =
       if (!indexHasIds(spark, indexTable, s.select(idCol), idCol, "id"))
         appendIdx(s)
@@ -515,7 +504,7 @@ object StreamingDedup {
    * admitted document — the near-verbatim-copy / quoted-wholesale
    * signal that token-set axes dilute (a copy with light edits keeps
    * almost all its char grams). The standing memory is the q225
-   * trigram index ([[graft.sources.Warehouse.saveTrigramIndex]]);
+   * trigram index ([[graft.sources.Layout.Trigram]]);
    * survivors' postings append blind.
    *
    * Hot grams are df-capped on BOTH sides (batch df and standing df
@@ -552,10 +541,8 @@ object StreamingDedup {
     // a sub-3-char doc has no gram rows — admitted, unmatchable, the
     // per-row degrade contract
     def appendIdx(s: DataFrame): Unit =
-      Warehouse.saveTrigramIndex(
-        Search.trigramPostings(s, idCol, textCol), indexTable,
-        buckets = indexBuckets,
-        mode = appendModeFor(spark, indexTable))
+      Warehouse.append(Layout.Trigram.copy(floor = indexBuckets), indexTable,
+        Search.trigramPostings(s, idCol, textCol))
     def ensureIdx(s: DataFrame): Unit =
       if (!indexHasIds(spark, indexTable, s.select(idCol), idCol, "doc_id"))
         appendIdx(s)
@@ -616,7 +603,7 @@ object StreamingDedup {
    * Winnowing admission — the SIXTH axis (SimHash hamming, MinHash
    * Jaccard, lexical cosine, semantic cosine, trigram containment,
    * and now MOSS-style shared-fingerprint matching), over the at-rest
-   * winnowing index ([[graft.sources.Warehouse.saveWinnowIndex]]): a
+   * winnowing index ([[graft.sources.Layout.Winnow]]): a
    * document is admitted only if no already-admitted document shares
    * ≥ `minShared` of its selected fingerprint hashes
    * ([[graft.operators.Dedup.winnowingFingerprints]], screened at
@@ -663,12 +650,11 @@ object StreamingDedup {
       sel.join(rare, "fp_hash")
     }
     def appendIdx(s: DataFrame): Unit =
-      Warehouse.saveWinnowIndex(selOf(s), indexTable,
-        buckets = indexBuckets, mode = appendModeFor(spark, indexTable))
+      Warehouse.append(Layout.Winnow.copy(floor = indexBuckets), indexTable,
+        selOf(s))
     def ensureIdx(s: DataFrame): Unit =
       if (!indexHasIds(spark, indexTable, s.select(idCol), idCol, idCol))
-        Warehouse.appendBucketedTable(selOf(s), indexTable, "fp_hash",
-          indexBuckets)
+        appendIdx(s)
     if (batchId.exists(recoverPartialCommit(spark, outPath, _, idCol, ensureIdx)))
       return
     val b = batch.persist()
@@ -709,7 +695,7 @@ object StreamingDedup {
   // ------------------------------------------------------------------
 
   /** Merged per-domain admitted counts from the standing partials
-    * table ([[graft.sources.Warehouse.saveDomainCounts]] layout).
+    * table ([[graft.sources.Layout.DomainCounts]] layout).
     * Stamp namespaces (the r15-advice collision fix): batch_id >= 0 is
     * RESERVED for admission rounds — replayed appends collapse via the
     * stamp before the sum, and the committed-probe in
@@ -811,10 +797,9 @@ object StreamingDedup {
     // exactly-once — stamp your batches.
     val stamp = batchId.getOrElse(-1L)
     def appendCounts(s: DataFrame): Unit =
-      Warehouse.saveDomainCounts(
+      Warehouse.append(Layout.DomainCounts.copy(floor = buckets), countsTable,
         domOf(s).groupBy("reg_domain").agg(count(lit(1)).as("n"))
-          .withColumn("batch_id", lit(stamp)),
-        countsTable, buckets, appendModeFor(spark, countsTable))
+          .withColumn("batch_id", lit(stamp)))
     // recovery probe: counts rows are batch-stamped, so presence of
     // this batch's stamp means the counts append committed (and a
     // double append would collapse on read anyway — belt and braces)
@@ -872,7 +857,7 @@ object StreamingDedup {
    * document per canonical URL key
    * ([[graft.operators.Url.canonicalizeUrlExt]] — fragment/tracking
    * strip + IDN + percent normalization) and rejects keys already in
-   * the standing index ([[graft.sources.Warehouse.saveUrlKeyIndex]],
+   * the standing index ([[graft.sources.Layout.UrlKeys]],
    * bucketed by key so the probe anti-join shuffles only the batch).
    * Within-batch winners are the content-keyed `(md5(id), id)` rank —
    * reproducible across replays; survivors' keys blind-append to the
@@ -908,8 +893,8 @@ object StreamingDedup {
           concat(lit("(invalid-url):"), col(idCol).cast("string")))
           .as("url_key"))
     def appendKeys(s: DataFrame): Unit =
-      Warehouse.saveUrlKeyIndex(keysOf(s), keysTable,
-        buckets = keyBuckets, mode = appendModeFor(spark, keysTable))
+      Warehouse.append(Layout.UrlKeys.copy(floor = keyBuckets), keysTable,
+        keysOf(s))
     def ensureKeys(s: DataFrame): Unit =
       if (!indexHasIds(spark, keysTable, s.select(idCol), idCol, idCol))
         appendKeys(s)

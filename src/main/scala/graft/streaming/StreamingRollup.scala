@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.Rollup
-import graft.sources.Warehouse
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import graft.sources.{Layout, Warehouse}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -45,9 +45,10 @@ object StreamingRollup {
                   buckets: Int = 8): Unit = {
     val partials = Rollup.dailyPartials(batch, dayCol, typeCol, valueCol)
       .withColumn("batch_id", lit(batchId))
-    val mode = if (batch.sparkSession.catalog.tableExists(table))
-      SaveMode.Append else SaveMode.Overwrite
-    Warehouse.saveRollup(partials, table, buckets, mode)
+    val layout = Layout.Rollup.copy(floor = buckets)
+    if (batch.sparkSession.catalog.tableExists(table))
+      Warehouse.append(layout, table, partials)
+    else Warehouse.save(layout, table, partials)
   }
 
   /** Merged presentation with replayed batches collapsed: duplicate

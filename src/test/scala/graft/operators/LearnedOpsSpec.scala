@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import graft.sources.{Layout, Warehouse}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -115,8 +116,8 @@ class LearnedOpsSpec extends AnyFunSuite with SparkTestSession {
     val probes = emb.where(col("vec_id") < 2)
     val tbl = "graft_bench_mrl_spec"
     graft.sources.Warehouse.dropWithLocation(spark, tbl)
-    graft.sources.Warehouse.saveEmbeddingsWithPrefix(
-      emb, "vec_id", "embedding", prefixDim = 16, tbl)
+    Warehouse.save(Layout.Plain, tbl,
+      Similarity.withPrefix(emb, "vec_id", "embedding", 16))
     val direct = Similarity.matryoshkaTopK(emb, probes, "vec_id",
         "embedding", prefixDim = 16, m = 20, k = 3)
       .orderBy("probe_id", "rn").collect().toSeq
@@ -221,7 +222,7 @@ class LearnedOpsSpec extends AnyFunSuite with SparkTestSession {
       .orderBy("vec_id").collect().toSeq
     val tbl = "graft_bench_kmed_spec"
     graft.sources.Warehouse.dropWithLocation(spark, tbl)
-    graft.sources.Warehouse.saveCentroids(cents, tbl)
+    Warehouse.save(Layout.Plain, tbl, cents)
     val stored = Similarity.classifyNearestCentroid(test_, spark.table(tbl),
         "vec_id", "embedding", "vec_id")
       .select("vec_id", "assigned")
@@ -245,14 +246,14 @@ class LearnedOpsSpec extends AnyFunSuite with SparkTestSession {
     graft.sources.Warehouse.dropWithLocation(spark, s"${tbl}_labels")
     val (c1, l1) = TextAnalysis.naiveBayesFit(
       train.filter(col("doc_id") % 4 === 0), "doc_id", "text", "lang")
-    graft.sources.Warehouse.saveNbModel(c1, l1, tbl)
+    Warehouse.save(Layout.NaiveBayes, tbl, c1, l1)
     // after the first save, _params holds the batch-1 vocab exactly
     val vocab1 = spark.table(s"${tbl}_params")
       .select("vocab_size").head().getLong(0)
     assert(vocab1 == c1.select("tok").distinct().count())
     val (c2, l2) = TextAnalysis.naiveBayesFit(
       train.filter(col("doc_id") % 4 === 2), "doc_id", "text", "lang")
-    graft.sources.Warehouse.appendNbModel(c2, l2, tbl)
+    Warehouse.append(Layout.NaiveBayes, tbl, c2, l2)
     // vocab is NOT additive: the append refreshed _params to the
     // distinct-token count of the UNION (shared tokens counted once),
     // and the table stays one-row

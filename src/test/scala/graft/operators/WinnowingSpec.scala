@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import graft.sources.{Layout, Warehouse}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,10 +60,8 @@ class WinnowingSpec extends AnyFunSuite with SparkTestSession {
       .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
     val tbl = "graft_bench_winnow_spec"
     graft.sources.Warehouse.dropWithLocation(spark, tbl)
-    graft.sources.Warehouse.saveWinnowIndex(
-      sel.filter(col("doc_id") % 2 === 0), tbl)
-    graft.sources.Warehouse.appendWinnowIndex(
-      sel.filter(col("doc_id") % 2 === 1), tbl)
+    Warehouse.save(Layout.Winnow, tbl, sel.filter(col("doc_id") % 2 === 0))
+    Warehouse.append(Layout.Winnow, tbl, sel.filter(col("doc_id") % 2 === 1))
     val stored = spark.table(tbl)
       .select("doc_id", "fp_hash").orderBy("doc_id", "fp_hash")
       .collect().toSeq

@@ -22,6 +22,8 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     Files.writeString(dir.resolve("wh.log"), sb.result())
     SlowLogTable.flatten(SlowLogSource.readRaw(spark, dir.toString))
   }
+  // the digest layout's rows: the wide table plus its q_date column
+  private lazy val dated = wide.withColumn("q_date", to_date(col("ts")))
 
   test("AQE coalesces shuffle partitions at runtime (SCALE.md §0 posture)") {
     // 12 tiny rows through a 4-partition shuffle: AQE should fuse the
@@ -57,7 +59,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val frame = graft.operators.Similarity.annBucketFrame(
       emb, "vec_id", "embedding")
-    Warehouse.saveAnnIndex(frame, "ann_idx", buckets = 8)
+    Warehouse.save(Layout.Ann.copy(floor = 8), "ann_idx", frame)
     try {
       // a probe's lookup key (table 0) for vec_id 0, computed from the
       // same deterministic hyperplanes the index was built with
@@ -84,7 +86,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val bands = graft.operators.Dedup.simHashBandFrame(
       docs, "doc_id", split(col("text"), " "))
-    Warehouse.saveSimHashIndex(bands, "simhash_idx", buckets = 8)
+    Warehouse.save(Layout.SimHash.copy(floor = 8), "simhash_idx", bands)
     try {
       // probe: one document's band-0 key, computed from the same
       // deterministic fingerprint math the index was built with
@@ -128,7 +130,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     import graft.operators.Dedup
     val bands = Dedup.minHashBandFrame(docs, "doc_id", "text")
     val sh = Dedup.shingles(docs, "doc_id", "text", n = 3)
-    Warehouse.saveMinHashIndex(bands, sh, "minhash_idx", buckets = 8)
+    Warehouse.save(Layout.minHash().copy(floor = 8), "minhash_idx", bands, sh)
     try {
       // probe: one document's band-0 key, computed from the same
       // stateless seed-derived signature math the index was built with
@@ -161,13 +163,12 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       // append is stateless: a split build + append equals the full build
       val (docA, docB) =
         (docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250))
-      Warehouse.saveMinHashIndex(
+      Warehouse.save(Layout.minHash().copy(floor = 8), "mh_app",
         Dedup.minHashBandFrame(docA, "doc_id", "text"),
-        Dedup.shingles(docA, "doc_id", "text", n = 3), "mh_app", buckets = 8)
-      Warehouse.saveMinHashIndex(
+        Dedup.shingles(docA, "doc_id", "text", n = 3))
+      Warehouse.append(Layout.minHash().copy(floor = 8), "mh_app",
         Dedup.minHashBandFrame(docB, "doc_id", "text"),
-        Dedup.shingles(docB, "doc_id", "text", n = 3), "mh_app", buckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Append)
+        Dedup.shingles(docB, "doc_id", "text", n = 3))
       val viaAppended = pairs(Dedup.minHashDedupPairsFrom(
         spark.table("mh_app"), spark.table("mh_app_shingles"), "doc_id"))
       assert(viaAppended == direct)
@@ -196,7 +197,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (cells, centroids) = graft.operators.Similarity.ivfIndex(
       emb, "vec_id", "embedding", nlist = 8)
-    Warehouse.saveIvfIndex(cells, centroids, "ivf_idx", buckets = 8)
+    Warehouse.save(Layout.Ivf.copy(floor = 8), "ivf_idx", cells, centroids)
     try {
       // one cell's rows: a bucket-pruned scan of the stored table
       val someCell = cells.select("cell").orderBy("cell").limit(1)
@@ -229,7 +230,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (codes, codebook) = graft.operators.Similarity.pqIndex(
       emb, "vec_id", "embedding")
-    Warehouse.savePqIndex(codes, codebook, "pq_idx")
+    Warehouse.save(Layout.Pq, "pq_idx", codes, codebook)
     try {
       // the at-rest win is size: subspaces ints per vector, not dims
       assert(spark.table("pq_idx").count() == emb.count() * 8)
@@ -257,7 +258,8 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     import graft.operators.Similarity
     val (codes, centroids, codebook) =
       Similarity.ivfPqIndex(emb, "vec_id", "embedding", nlist = 8)
-    Warehouse.saveIvfPqIndex(codes, centroids, codebook, "ivfpq_idx", buckets = 8)
+    Warehouse.save(Layout.IvfPq.copy(floor = 8), "ivfpq_idx", codes, centroids,
+      codebook)
     try {
       // the at-rest shape: subspaces ints per vector, pruning key on
       // every code row, broadcast-sized quantizer tables
@@ -289,11 +291,12 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
         (emb.filter(col("vec_id") < 250), emb.filter(col("vec_id") >= 250))
       val (codesA, centA, bookA) =
         Similarity.ivfPqIndex(embA, "vec_id", "embedding", nlist = 8)
-      Warehouse.saveIvfPqIndex(codesA, centA, bookA, "ivfpq_app", buckets = 8)
-      Warehouse.appendIvfPqIndex(
+      Warehouse.save(Layout.IvfPq.copy(floor = 8), "ivfpq_app", codesA, centA,
+        bookA)
+      Warehouse.append(Layout.IvfPq.copy(floor = 8), "ivfpq_app",
         Similarity.ivfPqEncode(embB, "vec_id", "embedding",
           spark.table("ivfpq_app_centroids"),
-          spark.table("ivfpq_app_codebook")), "ivfpq_app", buckets = 8)
+          spark.table("ivfpq_app_codebook")))
       assert(spark.table("ivfpq_app").count() == emb.count() * 8)
       val reEnc = Similarity.ivfPqEncode(embB, "vec_id", "embedding",
           spark.table("ivfpq_app_centroids"), spark.table("ivfpq_app_codebook"))
@@ -336,16 +339,14 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val (embA, embB) = (emb.filter(col("vec_id") < 250), emb.filter(col("vec_id") >= 250))
     val (docA, docB) = (docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250))
     import graft.operators.{Dedup, Similarity}
-    Warehouse.saveAnnIndex(
-      Similarity.annBucketFrame(embA, "vec_id", "embedding"), "ann_app", buckets = 8)
-    Warehouse.saveAnnIndex(
-      Similarity.annBucketFrame(embB, "vec_id", "embedding"), "ann_app",
-      buckets = 8, mode = org.apache.spark.sql.SaveMode.Append)
-    Warehouse.saveSimHashIndex(
-      Dedup.simHashBandFrame(docA, "doc_id", split(col("text"), " ")), "sh_app", buckets = 8)
-    Warehouse.saveSimHashIndex(
-      Dedup.simHashBandFrame(docB, "doc_id", split(col("text"), " ")), "sh_app",
-      buckets = 8, mode = org.apache.spark.sql.SaveMode.Append)
+    Warehouse.save(Layout.Ann.copy(floor = 8), "ann_app",
+      Similarity.annBucketFrame(embA, "vec_id", "embedding"))
+    Warehouse.append(Layout.Ann.copy(floor = 8), "ann_app",
+      Similarity.annBucketFrame(embB, "vec_id", "embedding"))
+    Warehouse.save(Layout.SimHash.copy(floor = 8), "sh_app",
+      Dedup.simHashBandFrame(docA, "doc_id", split(col("text"), " ")))
+    Warehouse.append(Layout.SimHash.copy(floor = 8), "sh_app",
+      Dedup.simHashBandFrame(docB, "doc_id", split(col("text"), " ")))
     try {
       val full = Similarity.annBucketFrame(emb, "vec_id", "embedding")
         .select("id", "table", "key").collect()
@@ -376,9 +377,8 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       // and a floor-sized batch can never break an adaptive-bucketed
       // save. The table keeps its original count and the rows land.
       val beforeRows = spark.table("ann_app").count()
-      Warehouse.saveAnnIndex(
-        Similarity.annBucketFrame(embB, "vec_id", "embedding"), "ann_app",
-        buckets = 4, mode = org.apache.spark.sql.SaveMode.Append)
+      Warehouse.append(Layout.Ann.copy(floor = 4), "ann_app",
+        Similarity.annBucketFrame(embB, "vec_id", "embedding"))
       val spec = spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier("ann_app"))
         .bucketSpec
@@ -401,16 +401,16 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val (embA, embB) = (emb.filter(col("vec_id") < 250), emb.filter(col("vec_id") >= 250))
     import graft.operators.Similarity
     val (cellsA, centroids) = Similarity.ivfIndex(embA, "vec_id", "embedding", nlist = 8)
-    Warehouse.saveIvfIndex(cellsA, centroids, "ivf_app", buckets = 8)
+    Warehouse.save(Layout.Ivf.copy(floor = 8), "ivf_app", cellsA, centroids)
     val (codesA, codebook) = Similarity.pqIndex(embA, "vec_id", "embedding")
-    Warehouse.savePqIndex(codesA, codebook, "pq_app")
+    Warehouse.save(Layout.Pq, "pq_app", codesA, codebook)
     try {
-      Warehouse.appendIvfIndex(
+      Warehouse.append(Layout.Ivf.copy(floor = 8), "ivf_app",
         Similarity.ivfAssign(embB, "vec_id", "embedding",
-          spark.table("ivf_app_centroids")), "ivf_app", buckets = 8)
-      Warehouse.appendPqIndex(
+          spark.table("ivf_app_centroids")))
+      Warehouse.append(Layout.Pq, "pq_app",
         Similarity.pqEncode(embB, "vec_id", "embedding",
-          spark.table("pq_app_codebook")), "pq_app")
+          spark.table("pq_app_codebook")))
       assert(spark.table("ivf_app").count() == emb.count())
       assert(spark.table("pq_app").count() == emb.count() * 8)
       // appended rows carry codes from the STORED model: re-encoding the
@@ -457,7 +457,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     // shrink a size-only estimate), and broadcast once ANALYZE gives it
     // ndv/rowCount to estimate the slice's true cardinality.
     spark.conf.set("spark.sql.cbo.enabled", "true")
-    Warehouse.saveBucketed(wide, "queries_stats", buckets = 4)
+    Warehouse.save(Layout.Digest.copy(floor = 4), "queries_stats", dated)
     try {
       val digest = spark.table("queries_stats")
         .select("digest").orderBy("digest").limit(1)
@@ -504,10 +504,10 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       "doc_id", split(col("text"), " "))
     // a build plus three admission-style appends: each append lays down
     // its own file per non-empty bucket
-    Warehouse.saveSimHashIndex(bands(0, 125), "sh_cmp", buckets = 8)
+    Warehouse.save(Layout.SimHash.copy(floor = 8), "sh_cmp", bands(0, 125))
     for (lo <- Seq(125L, 250L, 375L))
-      Warehouse.saveSimHashIndex(bands(lo, lo + 125), "sh_cmp", buckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Append)
+      Warehouse.append(Layout.SimHash.copy(floor = 8), "sh_cmp",
+        bands(lo, lo + 125))
     try {
       val pairsBefore = Dedup
         .simHashNearDupPairsFrom(spark.table("sh_cmp"), "doc_id", maxHamming = 16)
@@ -576,7 +576,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     import graft.operators.Similarity
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (codes, params) = Similarity.sq8Index(emb, "vec_id", "embedding")
-    Warehouse.saveSq8Index(codes, params, "sq8_idx", buckets = 8)
+    Warehouse.save(Layout.Sq8.copy(floor = 8), "sq8_idx", codes, params)
     try {
       // every code is an 8-bit level
       val bad = spark.table("sq8_idx")
@@ -620,7 +620,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val post = graft.operators.Search.postings(docs, "doc_id", "text")
-    Warehouse.saveInvertedIndex(post, "inverted_idx", buckets = 8)
+    Warehouse.save(Layout.Inverted.copy(floor = 8), "inverted_idx", post)
     try {
       // a single-term lookup scans only that term's bucket
       val lookup = spark.table("inverted_idx").filter(col("token") === "hash")
@@ -648,7 +648,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val firstBatch = docs.filter(col("doc_id") < 150)
     val rest = docs.filter(col("doc_id") >= 150)
     val pp = graft.operators.Search.trigramPostings(firstBatch, "doc_id", "text")
-    Warehouse.saveTrigramIndex(pp, "trigram_idx", buckets = 8)
+    Warehouse.save(Layout.Trigram.copy(floor = 8), "trigram_idx", pp)
     try {
       // a single-gram probe scans only that gram's bucket
       val lookup = spark.table("trigram_idx").filter(col("gram") === "sca")
@@ -664,9 +664,8 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       assert(stored == direct && stored.nonEmpty)
       // blind append of the second batch: the grown index finds the
       // full corpus's matches — identical to a from-scratch build
-      Warehouse.appendTrigramIndex(
-        graft.operators.Search.trigramPostings(rest, "doc_id", "text"),
-        "trigram_idx", buckets = 8)
+      Warehouse.append(Layout.Trigram.copy(floor = 8), "trigram_idx",
+        graft.operators.Search.trigramPostings(rest, "doc_id", "text"))
       val grown = ids(spark.table("trigram_idx"), docs)
       val scratch = ids(
         graft.operators.Search.trigramPostings(docs, "doc_id", "text"), docs)
@@ -682,7 +681,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pp = graft.operators.Search.positionalPostings(docs, "doc_id", "text")
-    Warehouse.saveInvertedIndex(pp, "positional_idx", buckets = 8)
+    Warehouse.save(Layout.Inverted.copy(floor = 8), "positional_idx", pp)
     try {
       // each phrase word reads only its token's bucket (pos rides along)
       val lookup = spark.table("positional_idx").filter(col("token") === "slow")
@@ -726,7 +725,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     val probes = docs.filter(col("doc_id") < 20)
     val tfc = graft.operators.Dedup.cappedLexicalTf(corpus, "doc_id", "text", 400L)
     val norms = graft.operators.Dedup.lexicalNorms(tfc)
-    Warehouse.saveLexicalIndex(tfc, norms, "lex_idx", buckets = 8)
+    Warehouse.save(Layout.Lexical.copy(floor = 8), "lex_idx", tfc, norms)
     try {
       def rows(tf: org.apache.spark.sql.DataFrame,
                n: org.apache.spark.sql.DataFrame) =
@@ -766,12 +765,12 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     // arrival split on id % 4 — independent of the (day, type) keys, so
     // every batch hits every key and the stored table REALLY holds
     // duplicate partial rows per key (the thing merge-on-read collapses)
-    Warehouse.saveRollup(partials(ev.filter(col("id") % 4 < 2)),
-      "rollup_tbl", buckets = 4)
-    Warehouse.saveRollup(partials(ev.filter(col("id") % 4 === 2)),
-      "rollup_tbl", buckets = 4, mode = org.apache.spark.sql.SaveMode.Append)
-    Warehouse.saveRollup(partials(ev.filter(col("id") % 4 === 3)),
-      "rollup_tbl", buckets = 4, mode = org.apache.spark.sql.SaveMode.Append)
+    Warehouse.save(Layout.Rollup.copy(floor = 4), "rollup_tbl",
+      partials(ev.filter(col("id") % 4 < 2)))
+    Warehouse.append(Layout.Rollup.copy(floor = 4), "rollup_tbl",
+      partials(ev.filter(col("id") % 4 === 2)))
+    Warehouse.append(Layout.Rollup.copy(floor = 4), "rollup_tbl",
+      partials(ev.filter(col("id") % 4 === 3)))
     try {
       // the stored table holds one partial row per key per batch
       assert(spark.table("rollup_tbl").count() > 21)
@@ -809,10 +808,10 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       (col("id") % 40).as("u"))
     def parts(b: org.apache.spark.sql.DataFrame) =
       Rollup.distinctPartials(b, col("d"), col("ty"), col("u"))
-    Warehouse.saveRollup(parts(ev.filter(col("id") % 2 === 0)),
-      "rollup_sk", buckets = 4)
-    Warehouse.saveRollup(parts(ev.filter(col("id") % 2 === 1)),
-      "rollup_sk", buckets = 4, mode = org.apache.spark.sql.SaveMode.Append)
+    Warehouse.save(Layout.Rollup.copy(floor = 4), "rollup_sk",
+      parts(ev.filter(col("id") % 2 === 0)))
+    Warehouse.append(Layout.Rollup.copy(floor = 4), "rollup_sk",
+      parts(ev.filter(col("id") % 2 === 1)))
     try {
       val est = Rollup.estimateDistinct(spark.table("rollup_sk"))
         .collect().map(r => (r.getLong(0), r.getString(1)) ->
@@ -831,7 +830,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
 
   test("digest-bucketed table aggregates per digest without an exchange") {
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    Warehouse.saveBucketed(wide, "queries_bucketed", buckets = 4)
+    Warehouse.save(Layout.Digest.copy(floor = 4), "queries_bucketed", dated)
     try {
       val agg = spark.table("queries_bucketed")
         .groupBy("digest").agg(count(lit(1)).as("cnt"), sum("query_time").as("t"))
@@ -916,19 +915,147 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
     spark.conf.set("spark.graft.buckets", "256")
     try assert(Warehouse.adaptiveBuckets(emb, 32) == 256)
     finally spark.conf.unset("spark.graft.buckets")
+    // ...taken as given, even below the layout's floor
+    spark.conf.set("spark.graft.buckets", "4")
+    try assert(Warehouse.adaptiveBuckets(emb, 32) == 4)
+    finally spark.conf.unset("spark.graft.buckets")
+    // ...and a malformed value is rejected naming the conf
+    spark.conf.set("spark.graft.buckets", "x")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Warehouse.adaptiveBuckets(emb, 32))
+      assert(e.getMessage.contains("spark.graft.buckets"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.buckets")
     // 4. an append follows the STORED table's bucket spec even when the
     //    caller declares a different count (an adaptive save must not be
     //    broken by a floor-sized append batch)
     val postings = graft.operators.Search.trigramPostings(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .limit(30), "doc_id", "text")
-    Warehouse.saveTrigramIndex(postings, "adaptive_tri", buckets = 4)
-    Warehouse.appendTrigramIndex(postings, "adaptive_tri", buckets = 16)
+    Warehouse.save(Layout.Trigram.copy(floor = 4), "adaptive_tri", postings)
+    Warehouse.append(Layout.Trigram.copy(floor = 16), "adaptive_tri", postings)
     val spec = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier("adaptive_tri"))
       .bucketSpec
     assert(spec.map(_.numBuckets).contains(4),
       s"append must keep the stored 4-bucket layout, got $spec")
     Warehouse.dropWithLocation(spark, "adaptive_tri")
+  }
+
+  test("append never clears an orphaned location; save does") {
+    // an in-memory catalog forgets its tables at JVM exit while their
+    // managed locations survive: files at the default path, no entry
+    val t = "orphan_simhash"
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(t)
+    Warehouse.dropWithLocation(spark, t)
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.defaultTablePath(ident))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rows = spark.range(3).select(col("id"), col("id").as("key"))
+    rows.write.parquet(loc.toString)
+    def files = fs.listStatus(loc).map(_.getPath.getName).toSet
+    val before = files
+    try {
+      assert(!spark.catalog.tableExists(t))
+      val e = intercept[Exception](Warehouse.append(Layout.SimHash, t, rows))
+      assert(e.getMessage.contains("LOCATION_ALREADY_EXISTS"), e.getMessage)
+      assert(files == before, "append must leave the orphaned files in place")
+      // an overwrite owns the location: it clears the orphan and writes
+      Warehouse.save(Layout.SimHash, t, rows.limit(1))
+      assert(spark.table(t).count() == 1)
+    } finally Warehouse.dropWithLocation(spark, t)
+  }
+
+  test("NB params side is derived on every save and append, dropped with " +
+    "the family") {
+    import spark.implicits._
+    val t = "derived_nb"
+    def counts(toks: String*) = toks.map(("a", _, 1L)).toDF("_lab", "tok", "c")
+    val labels = Seq(("a", 1L, 1L)).toDF("_lab", "tot", "n_docs")
+    def vocab = spark.table(Warehouse.sideTable(t, Side.NbParams))
+      .select("vocab_size").as[Long].collect().toSeq
+    try {
+      Warehouse.save(Layout.NaiveBayes, t, counts("x", "y"), labels)
+      assert(vocab == Seq(2L))
+      Warehouse.append(Layout.NaiveBayes, t, counts("y", "z"), labels)
+      assert(vocab == Seq(3L))
+    } finally Warehouse.drop(spark, Layout.NaiveBayes, t)
+    for (p <- Layout.NaiveBayes.parts(t))
+      assert(!spark.catalog.tableExists(p._1), p._1)
+  }
+
+  test("layout golden: every family's tables, bucket/sort columns and " +
+    "bucket counts read back from the catalog") {
+    val f = spark.range(3).select(col("id").as("a"))
+    def kf(k: String) = f.withColumn(k, col("a"))
+    val emb = spark.range(2).select(col("id"),
+      array(lit(1.0), lit(2.0), lit(3.0)).as("emb"))
+    Warehouse.save(Layout.Digest, "gl_digest", dated)
+    Warehouse.save(Layout.Ann, "gl_ann", kf("key"))
+    Warehouse.save(Layout.SimHash, "gl_simhash", kf("key"))
+    Warehouse.save(Layout.minHash(), "gl_minhash", kf("key"), kf("doc_id"))
+    Warehouse.save(Layout.Inverted, "gl_inverted", kf("token"))
+    Warehouse.save(Layout.Winnow, "gl_winnow", kf("fp_hash"))
+    Warehouse.save(Layout.Trigram, "gl_trigram", kf("gram"))
+    Warehouse.save(Layout.Rollup, "gl_rollup", kf("day"))
+    Warehouse.save(Layout.DomainCounts, "gl_domain", kf("reg_domain"))
+    Warehouse.save(Layout.UrlKeys, "gl_urlkey", kf("url_key"))
+    Warehouse.save(Layout.Lexical, "gl_lexical", kf("tok"), f)
+    Warehouse.save(Layout.NaiveBayes, "gl_nb", kf("tok"), f)
+    Warehouse.save(Layout.Plain, "gl_centroids", f)
+    Warehouse.save(Layout.Plain, "gl_refcounts", f)
+    Warehouse.save(Layout.Plain, "gl_bpe", f)
+    Warehouse.save(Layout.Plain, "gl_prefix",
+      graft.operators.Similarity.withPrefix(emb, "id", "emb", 2))
+    Warehouse.save(Layout.Ivf, "gl_ivf", kf("cell"), f)
+    Warehouse.save(Layout.Pq, "gl_pq", kf("id"), f)
+    Warehouse.save(Layout.Sq8, "gl_sq8", kf("id"), f)
+    Warehouse.save(Layout.IvfPq, "gl_ivfpq", kf("cell"), f, f)
+    // table -> (bucket = sort column, numBuckets); None = plain table
+    val expected: Seq[(String, Option[(String, Int)])] = Seq(
+      "gl_digest" -> Some("digest" -> 32),
+      "gl_ann" -> Some("key" -> 32),
+      "gl_simhash" -> Some("key" -> 32),
+      "gl_minhash" -> Some("key" -> 32),
+      "gl_minhash_shingles" -> Some("doc_id" -> 32),
+      "gl_inverted" -> Some("token" -> 32),
+      "gl_winnow" -> Some("fp_hash" -> 32),
+      "gl_trigram" -> Some("gram" -> 32),
+      "gl_rollup" -> Some("day" -> 8),
+      "gl_domain" -> Some("reg_domain" -> 8),
+      "gl_urlkey" -> Some("url_key" -> 32),
+      "gl_lexical" -> Some("tok" -> 32),
+      "gl_lexical_norms" -> None,
+      "gl_nb" -> Some("tok" -> 32),
+      "gl_nb_labels" -> None,
+      "gl_nb_params" -> None,
+      "gl_centroids" -> None,
+      "gl_refcounts" -> None,
+      "gl_bpe" -> None,
+      "gl_prefix" -> None,
+      "gl_ivf" -> Some("cell" -> 16),
+      "gl_ivf_centroids" -> None,
+      "gl_pq" -> Some("id" -> 32),
+      "gl_pq_codebook" -> None,
+      "gl_sq8" -> Some("id" -> 32),
+      "gl_sq8_params" -> None,
+      "gl_ivfpq" -> Some("cell" -> 16),
+      "gl_ivfpq_centroids" -> None,
+      "gl_ivfpq_codebook" -> None)
+    try {
+      val written = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("gl_")).toSet
+      assert(written == expected.map(_._1).toSet)
+      val cat = spark.sessionState.catalog
+      for ((t, want) <- expected) {
+        val spec = cat.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(t)).bucketSpec
+        val got = spec.map { s =>
+          assert(s.sortColumnNames == s.bucketColumnNames, s"$t: $s")
+          (s.bucketColumnNames, s.numBuckets)
+        }
+        assert(got == want.map { case (c, n) => (Seq(c), n) }, s"$t: $spec")
+      }
+    } finally expected.foreach(t => Warehouse.dropWithLocation(spark, t._1))
   }
 }

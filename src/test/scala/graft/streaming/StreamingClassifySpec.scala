@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.operators.TextAnalysis
-import graft.sources.Warehouse
+import graft.sources.{Layout, Warehouse}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,7 +32,7 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestSession {
     val train1 = Seq((0L, "x x x y", "a"), (2L, "z z z y", "b"))
       .toDF("doc_id", "text", "lang")
     val (c1, l1) = TextAnalysis.naiveBayesFit(train1, "doc_id", "text", "lang")
-    Warehouse.saveNbModel(c1, l1, tbl)
+    Warehouse.save(Layout.NaiveBayes, tbl, c1, l1)
 
     def runOnce(): Unit = {
       val q = StreamingClassify.nbServe(
@@ -54,7 +54,7 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestSession {
     // model v2 lands BETWEEN triggers: lang c owns token 'q'
     val train2 = Seq((4L, "q q q", "c")).toDF("doc_id", "text", "lang")
     val (c2, l2) = TextAnalysis.naiveBayesFit(train2, "doc_id", "text", "lang")
-    Warehouse.appendNbModel(c2, l2, tbl)
+    Warehouse.append(Layout.NaiveBayes, tbl, c2, l2)
 
     // batch 2: the SAME 'q q' text now classifies as c — no restart
     Seq((12L, "q q", "c"), (13L, "x x", "a"))
@@ -93,8 +93,8 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestSession {
     val tbl = "graft_bench_stream_cent"
     Warehouse.dropWithLocation(spark, tbl)
     // v1: two centroids on the axes
-    Warehouse.saveCentroids(
-      Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f))).toDF("label", "centroid"), tbl)
+    Warehouse.save(Layout.Plain, tbl,
+      Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f))).toDF("label", "centroid"))
 
     def runOnce(): Unit = {
       val q = StreamingClassify.centroidServe(
@@ -112,9 +112,9 @@ class StreamingClassifySpec extends AnyFunSuite with SparkTestSession {
     assert(after1 == Set((10L, 0), (11L, 1)), after1)
 
     // centroid refresh between triggers: cluster 2 owns the diagonal
-    Warehouse.saveCentroids(
+    Warehouse.save(Layout.Plain, tbl,
       Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f)), (2, Seq(1f, 1f)))
-        .toDF("label", "centroid"), tbl)
+        .toDF("label", "centroid"))
     Seq((12L, Seq(0.7f, 0.7f)))
       .toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
     runOnce()

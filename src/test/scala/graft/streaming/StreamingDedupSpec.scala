@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.sources.Warehouse
+import graft.sources.{Layout, Warehouse}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -248,9 +248,8 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
     // write the output row WITHOUT duplicating index postings.
     val s8 = Seq((8L, doc("delta"))).toDF("doc_id", "text")
     s8.write.parquet(StreamingDedup.manifestDir(outDir, 2L))
-    Warehouse.saveTrigramIndex(
-      graft.operators.Search.trigramPostings(s8, "doc_id", "text"), tbl,
-      mode = org.apache.spark.sql.SaveMode.Append)
+    Warehouse.append(Layout.Trigram, tbl,
+      graft.operators.Search.trigramPostings(s8, "doc_id", "text"))
     val idxRows8 = spark.table(tbl).filter($"doc_id" === 8L).count()
     StreamingDedup.admitBatchTrigram(s8, "doc_id", "text", tbl, outDir,
       batchId = Some(2L))
@@ -299,8 +298,9 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
     val s2 = Seq((2L, doc("beta"))).toDF("doc_id", "text")
     s2.write.parquet(StreamingDedup.manifestDir(outDir, 1L))
     val sh2 = Dedup.shingles(s2, "doc_id", "text", 3)
-    Warehouse.appendBucketedTable(
-      Dedup.minHashBandFrameFromShingles(sh2, "doc_id"), tbl, "key", 32)
+    val (_, bandLayout) = Layout.minHash().parts(tbl).head
+    Warehouse.append(bandLayout, tbl,
+      Dedup.minHashBandFrameFromShingles(sh2, "doc_id"))
     val bandRows2 = spark.table(tbl).filter($"doc_id" === 2L).count()
     StreamingDedup.admitBatchMinHash(s2, "doc_id", "text", tbl, outDir,
       batchId = Some(1L))
@@ -474,8 +474,8 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestSession {
     val tbl = "graft_bench_stream_dcseed"
     Warehouse.dropWithLocation(spark, tbl)
     // seeded history: a.com already used 1 of its 2 slots
-    Warehouse.saveDomainCounts(
-      Seq(("a.com", 1L, -1L)).toDF("reg_domain", "n", "batch_id"), tbl)
+    Warehouse.save(Layout.DomainCounts, tbl,
+      Seq(("a.com", 1L, -1L)).toDF("reg_domain", "n", "batch_id"))
     val urlSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("url", StringType)))
     Seq((1L, "https://a.com/p/1"), (2L, "https://www.a.com/p/2"),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.operators.Qan
-import graft.sources.Warehouse
+import graft.sources.{Layout, Warehouse}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,8 +42,8 @@ class StreamingMonitorSpec extends AnyFunSuite with SparkTestSession {
 
     // reference: uniform over {0..4}, 20 rows
     val ref = (0 until 20).map(i => ("g", (i % 5).toLong)).toDF("grp", "units")
-    Warehouse.saveReferenceCounts(
-      StreamingMonitor.referenceCounts(ref, "grp", "units"), tbl)
+    Warehouse.save(Layout.Plain, tbl,
+      StreamingMonitor.referenceCounts(ref, "grp", "units"))
 
     def runOnce(): Unit = {
       val q = StreamingMonitor.ksServe(
@@ -69,8 +69,8 @@ class StreamingMonitorSpec extends AnyFunSuite with SparkTestSession {
 
     // reference refresh between triggers: 99 becomes normal
     val ref2 = (0 until 20).map(_ => ("g", 99L)).toDF("grp", "units")
-    Warehouse.saveReferenceCounts(
-      StreamingMonitor.referenceCounts(ref2, "grp", "units"), tbl)
+    Warehouse.save(Layout.Plain, tbl,
+      StreamingMonitor.referenceCounts(ref2, "grp", "units"))
     (0 until 10).map(_ => ("g", 99L)).toDF("grp", "units")
       .write.mode("append").parquet(srcDir)
     runOnce()
