@@ -17,6 +17,15 @@ if stray=$(grep -rnE '\.(bucketBy|saveAsTable)\(' src/main/scala \
   echo "$stray" >&2
   exit 1
 fi
+# Materialization guard: the eager local-vs-reliable checkpoint rule
+# lives in operators/Materialize.scala, so no other main source may
+# call localCheckpoint or checkpoint.
+if stray=$(grep -rnE '\.(localCheckpoint|checkpoint)\(' src/main/scala \
+    | grep -v '^src/main/scala/graft/operators/Materialize\.scala:'); then
+  echo "precommit: localCheckpoint/checkpoint outside operators/Materialize.scala:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 sbt -batch Test/compile
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test

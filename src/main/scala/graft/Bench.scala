@@ -198,24 +198,28 @@ object Bench {
     // round). The files are the durable record; stdout carries a short
     // summary the capture window cannot cut.
     //
-    // r17 (verdict item 1): every run writes the round-stable
-    // BENCH_LAST_<sf>.json (plus a core-count-keyed copy, so a low-core
-    // scaling run cannot clobber the main record and per-query scaling
-    // stays readable); the committed BENCH_BASELINE_<sf>.json is now
-    // IMMUTABLE between explicit refreshes (SPARK_GRAFT_BASELINE_REFRESH=1)
-    // — the r16 driver run overwrote the baseline with its own 8-core
-    // numbers, which made that run's vs_baseline_median compare
-    // 8-core-now vs 32-core-now.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Every run writes the core-count-keyed BENCH_LAST_<sf>_c<cpus>.json,
+    // so per-query scaling stays readable. The unkeyed round-stable
+    // BENCH_LAST_<sf>.json is written only by a run at the baseline's
+    // recorded core count (or one that refreshes the baseline), so a
+    // low-core scaling run cannot clobber the main record. The committed
+    // BENCH_BASELINE_<sf>.json is IMMUTABLE between explicit refreshes
+    // (SPARK_GRAFT_BASELINE_REFRESH=1) — an 8-core r16 run overwrote
+    // the 32-core baseline, which made that run's vs_baseline_median
+    // compare 8-core-now vs 32-core-now.
+    val cpus = GraftSession.cpus
     val fullLine =
       s"""{"metric":"total","value":${f4(core)},"unit":"sec","queries":$qs,"total_all":${f4(all)},"ingest_eps":${eps.round},"failed":$failedJson,"baseline":"$baseName","vs_baseline":$ratios,"cpus":$cpus,"sf":"$sfDir"}"""
     // Filenames are SF-KEYED so a quick local sf0.01 sanity bench can
     // never clobber the canonical sf0.1 records.
+    val refresh = sys.env.get("SPARK_GRAFT_BASELINE_REFRESH").contains("1")
+    val baseFile = new java.io.File(baselineFileFor(sfDir))
+    val baseCpus = Option.when(baseFile.isFile)(
+      recordedCpus(java.nio.file.Files.readString(baseFile.toPath))).flatten
     val outFiles =
-      Seq(lastFileFor(sfDir), s"BENCH_LAST_${sfName(sfDir)}_c$cpus.json") ++
-        (if (sys.env.get("SPARK_GRAFT_BASELINE_REFRESH").contains("1"))
-           Seq(baselineFileFor(sfDir))
-         else Nil)
+      Option.when(refresh || baseCpus.contains(cpus))(lastFileFor(sfDir)).toSeq ++
+        Seq(s"BENCH_LAST_${sfName(sfDir)}_c$cpus.json") ++
+        Option.when(refresh)(baselineFileFor(sfDir))
     outFiles.foreach { f =>
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(f), fullLine + "\n")
@@ -358,11 +362,18 @@ object Bench {
   private def baselineFileFor(sfDir: String): String =
     s"BENCH_BASELINE_${sfName(sfDir)}.json"
 
-  /** Round-stable per-query record, rewritten by every run:
+  /** Round-stable per-query record, rewritten by every run at the
+    * baseline's core count:
     * `BENCH_LAST_sf0.1.json` (committed at round close so the driver
     * can attribute per-query regressions — r16 verdict item 1). */
   private def lastFileFor(sfDir: String): String =
     s"BENCH_LAST_${sfName(sfDir)}.json"
+
+  /** The core count a bench record was taken at (its last `cpus` key,
+    * bare or escaped-quote); None for a record that predates the key. */
+  private def recordedCpus(txt: String): Option[Int] =
+    """\\?"cpus\\?":(\d+)""".r.findAllMatchIn(txt)
+      .map(_.group(1).toInt).toSeq.lastOption
 
   private def loadBaseline(sfDir: String): (String, Map[String, Double], Set[String]) = {
     val roundNum = "BENCH_r(\\d+)\\.json".r
@@ -386,17 +397,15 @@ object Bench {
       // r16 driver's 8-core run produced a 1.035 "median" against 32-core
       // seconds); a baseline without the key predates the cpus field and
       // is accepted as-is
-      val cpusRe = """\\?"cpus\\?":(\d+)""".r
-      val recordedCpus = cpusRe.findAllMatchIn(txt).map(_.group(1)).toSeq.lastOption
-      val nowCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+      val baseCpus = recordedCpus(txt)
       if (!"""\\?"queries\\?":""".r.findFirstIn(scoped).isDefined) {
         System.err.println(s"[bench] baseline ${f.getName} truncated before its queries map — skipping ratios")
         None
       } else if (recordedSf.exists(_ != sfDir)) {
         System.err.println(s"[bench] baseline ${f.getName} ran sf ${recordedSf.get}, this run is $sfDir — skipping ratios")
         None
-      } else if (recordedCpus.exists(_ != nowCpus)) {
-        System.err.println(s"[bench] baseline ${f.getName} ran at ${recordedCpus.get} cores, this run is $nowCpus — skipping ratios")
+      } else if (baseCpus.exists(_ != GraftSession.cpus)) {
+        System.err.println(s"[bench] baseline ${f.getName} ran at ${baseCpus.get} cores, this run is ${GraftSession.cpus} — skipping ratios")
         None
       } else {
         val re = """\\?"(q\d{2}[a-z0-9_]*)\\?":([0-9][0-9.Ee+-]*)""".r

@@ -26,10 +26,18 @@ import org.apache.spark.sql.SparkSession
  *    cluster submissions set it per job (SCALE.md §10).
  */
 object GraftSession {
-  def build(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    build(appName, s"local[$cpus]", cpus)
+  /** Local core count from `SPARK_GRAFT_CPUS`, parsed once. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A `SPARK_GRAFT_CPUS` value: 4 when unset; anything but a positive
+    * integer fails naming the variable. */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw.fold(4) { v =>
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
   }
+
+  def build(appName: String): SparkSession =
+    build(appName, s"local[$cpus]", cpus.toString)
 
   /** Single source of truth for session confs; tests call this with
     * their own master/parallelism so the conf lists cannot drift. */
@@ -63,6 +71,11 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2048"))
       .config("spark.ui.enabled", "false")
+      // reliable checkpoint files (operators.Materialize under a
+      // checkpoint dir) are deleted once their frame is garbage-collected,
+      // the lifetime local checkpoint blocks already have; Spark's default
+      // keeps them until someone deletes them by hand
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Materialize, Similarity}
 import graft.sources.{Layout, Side, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -169,15 +169,6 @@ object ScaleBench {
           System.err.println(s"SCALE inputs ${k}x: $events slow-log events / $files files")
           if (want("ingest_flatten"))
             record("ingest_flatten", k, time(flat()))
-          // decomposition (§19): the same flatten over the carry-free
-          // scan — the delta to ingest_flatten is the session-carry
-          // window's full-width exchange + per-partition sort, the one
-          // non-map stage in ingest
-          if (want("ingest_nocarry"))
-            record("ingest_nocarry", k, time(
-              graft.slowlog.SlowLogTable.flatten(
-                graft.slowlog.SlowLogSource.readRawNoCarry(
-                  spark, dir.toString))))
           if (want("qan_profile")) {
             // report cost over the warehouse AT REST: wide rows land in
             // parquet once (excluded, like the index builds), the QAN
@@ -1191,10 +1182,10 @@ object ScaleBench {
       // 2/(w+1)-sampled hashes with the df cap bounding hot grams, so
       // pair volume tracks true near-dup mass, not corpus²
       if (want("winnow_pairs")) record("winnow_pairs", k, time {
-        // eager localCheckpoint: one selection pass, not four (q255)
+        // materialized: one selection pass, not four (q255)
         val sel = Dedup.winnowingFingerprints(docs, "doc_id", "text", 3, 4)
           .select(col("doc_id"), col("fp_hash")).distinct()
-          .localCheckpoint()
+          .transform(Materialize(_))
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= 200L).select("fp_hash")
         val kept = sel.join(rare, "fp_hash")
@@ -1223,7 +1214,7 @@ object ScaleBench {
         val tbl = "graft_bench_scale_winnow"
         Warehouse.dropWithLocation(spark, tbl)
         val sel = Dedup.winnowingFingerprints(docs, "doc_id", "text", 3, 4)
-          .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
+          .select(col("doc_id"), col("fp_hash")).distinct().transform(Materialize(_))
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= 200L).select("fp_hash")
         Warehouse.save(Layout.Winnow, tbl, sel.join(rare, "fp_hash"))
@@ -1441,7 +1432,7 @@ object ScaleBench {
         Warehouse.dropWithLocation(spark, tbl)
         val idxSel = Dedup.winnowingFingerprints(
             docs.repartition(32), "doc_id", "text", 3, 4)
-          .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
+          .select(col("doc_id"), col("fp_hash")).distinct().transform(Materialize(_))
         val idxRare = idxSel.groupBy("fp_hash")
           .agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= 200L).select("fp_hash")

@@ -319,7 +319,7 @@ object Behavior {
     // distinct basket set materialized once: read by the tx census, the
     // item census, and both legs of the pair join (4×, r16)
     val it = transactions.select(col(txCol).as("_tx"), col(itemCol).as("_it"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize(_))
     val nTx = it.agg(countDistinct(col("_tx")).as("_n"))
     val ci = it.groupBy("_it").agg(count(lit(1)).as("_c"))
     val cp = it.select(col("_tx"), col("_it").as("ia"))
@@ -399,16 +399,14 @@ object Behavior {
    */
   def rfmSegments(events: DataFrame, keyCol: String, tsCol: Column,
                   valueCol: Column, buckets: Int = 4): DataFrame = {
-    // Eager localCheckpoint (the dedupClusters precedent): four
+    // Materialized (the dedupClusters precedent): four
     // consumers read this frame (three rank passes — each a separate
     // zipWithIndex job — plus the final key projection), and without
-    // materialization EACH re-aggregates the full event corpus. The
-    // frame is one row per entity — the bounded shape an entity
-    // aggregate always has, never corpus-sized.
+    // materialization EACH re-aggregates the full event corpus.
     val byUser = events.groupBy(col(keyCol))
       .agg(max(tsCol).as("_last"), count(lit(1)).as("_freq"),
         round(sum(valueCol), 4).as("_mon"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val n = byUser.agg(count(lit(1)).as("_n"))
     def tiles(metric: Column, out: String): DataFrame = {
       val ranked = graft.operators.Pipeline.globalRank(

@@ -104,7 +104,7 @@ object Bpe {
     val (_, words) = learn(docs, textCol, numMerges)
     // sever the result from the cached iteration chain (the caller
     // materializes lazily, after the unpersist below)
-    val snap = words.localCheckpoint()
+    val snap = Materialize(words)
     words.unpersist()
     snap
       .select(explode(expr("split(trim(w), ' ')")).as("tok"), col("n"))

@@ -190,18 +190,14 @@ object Dedup {
                         n: Int, threshold: Double,
                         maxShingleDf: Option[Long] = None): DataFrame = {
     // The shingle frame is MATERIALIZED once (eager, at build time — see
-    // [[Materialize]]'s contract note; blocks free on frame GC, unlike
-    // cache(), which would pin storage the caller can never unpersist):
+    // [[Materialize]]; storage frees on frame GC, unlike cache(), which
+    // would pin storage the caller can never unpersist):
     // the plan below references it four times (both join legs + both
     // count attaches), and the r16 optimization round measured the
     // explode subtree executing for each reference — exchange reuse
     // never fired because the legs' exchanges differ post-aliasing. One
-    // compute of split+explode over the corpus instead of four; the
-    // frame is corpus-token-sized, so [[Materialize.corpusFrame]] picks
-    // reliable checkpointing when the session configured a checkpoint
-    // dir (r16 verdict item 4) and local MEMORY_AND_DISK blocks
-    // otherwise.
-    val all = Materialize.corpusFrame(shingles(docs, idCol, textCol, n))
+    // compute of split+explode over the corpus instead of four.
+    val all = Materialize(shingles(docs, idCol, textCol, n))
     // Optional document-frequency cap (SCALE.md §4): stop-shingles carry
     // no discrimination and all of the join skew; dropping them bounds
     // Σ(bucket²). Off by default — the oracle comparison is exact.
@@ -272,11 +268,10 @@ object Dedup {
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
                                textCol: String, n: Int,
                                threshold: Double): DataFrame = {
-    // materialized once (the ngramJaccardPairs discipline; corpus-sized →
-    // fault-tolerant when a checkpoint dir is configured): referenced by
+    // materialized once (the ngramJaccardPairs discipline): referenced by
     // the df aggregate, the rank join, and BOTH verification legs — five
     // executions of the explode subtree without it
-    val sh = Materialize.corpusFrame(shingles(docs, idCol, textCol, n))
+    val sh = Materialize(shingles(docs, idCol, textCol, n))
     val counts = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("_df"))
     val ranked = sh.join(freq, "shingle")
@@ -551,7 +546,7 @@ object Dedup {
                             indexBands: DataFrame, indexShingles: DataFrame,
                             idCol: String,
                             threshold: Double = 0.6): DataFrame = {
-    // Eager localCheckpoint (batch-bounded rows): the candidate frame
+    // Materialized (eager): the candidate frame
     // feeds BOTH the shingle restriction below and the verify join —
     // lazy, the banded probe⋈index join would execute twice per
     // admission (the rejectedIds technique, applied one level down).
@@ -559,7 +554,7 @@ object Dedup {
       .join(indexBands.select(col(idCol).as("db"), col("band"), col("key")),
         Seq("band", "key"))
       .select("da", "db").distinct()
-      .localCheckpoint()
+      .transform(Materialize(_))
     // Restrict the index shingles to CANDIDATE ids before verification:
     // without this, the per-doc set-size aggregate inside the verify
     // groups the ENTIRE corpus shingle table per admission (measured:
@@ -614,7 +609,7 @@ object Dedup {
    * fixpoint) — cheaper than re-joining against the previous labels to
    * diff them, since the sum runs over the frame the round materializes
    * anyway. Results are persisted
-   * per round, and every 4th round eagerly `localCheckpoint()`s to
+   * per round, and every 4th round is eagerly materialized to
    * truncate lineage (the per-round plan otherwise doubles — see the
    * in-loop note); [[dedupClustersStar]] is the same fixpoint computed
    * in O(log) alternations when components stop being shallow (here,
@@ -670,18 +665,18 @@ object Dedup {
       // DOUBLES per round — caching stores the DATA but not a shorter
       // plan, and beyond ~8 rounds the plan description built per action
       // for the execution listener alone OOMs the driver (deep-path spec
-      // reproduces at diameter 11). A LAZY localCheckpoint resets the
-      // plan to its materialized blocks; every-4 keeps the common
+      // reproduces at diameter 11). Materializing resets the
+      // plan to its materialized rows; every-4 keeps the common
       // clique-ish components (diameter 2-4, never reach a checkpoint)
       // on the pure-cache path. EAGER deliberately (r17 A/B): a lazy
-      // localCheckpoint whose blocks the lblSum probe populates would
+      // checkpoint whose blocks the lblSum probe populates would
       // save one job per checkpoint round, but measured consistently
       // SLOWER — q67 QBench sf0.1 3.15 -> 3.53 s, ScaleBench 10x
       // q67_cluster_only 1.83/1.90 -> 2.19/2.23 s — so the fused
       // compute+probe job costs more than the saved block-read action
       // at both scales; reverted per the checkpoint-pays rule.
       val next =
-        if (iter % 4 == 0) hop(labels).localCheckpoint(true)
+        if (iter % 4 == 0) Materialize(hop(labels))
         else hop(labels).persist()
       val s = lblSum(next)
       converged = s == prevSum
@@ -696,14 +691,11 @@ object Dedup {
         s"dedupClusters did not converge in $maxIter rounds — the pair " +
           "graph has a component of diameter > maxIter; raise maxIter")
     }
-    // Hand back the fixpoint as an eager localCheckpoint, then drop the
-    // loop's caches: the label table is bounded (one row per paired doc,
-    // ≪ corpus), and without the checkpoint every consumer would re-run
-    // the ENTIRE pair pipeline + propagation from bare lineage — at
-    // sf0.1 that doubled the operator's cost. Checkpoint blocks free on
-    // frame GC; on a cluster, executor loss invalidates them (use
-    // reliable checkpointing there if the job must survive it).
-    val out = labels.localCheckpoint(true)
+    // Hand back the fixpoint materialized, then drop the loop's caches:
+    // without it every consumer would re-run the ENTIRE pair pipeline +
+    // propagation from bare lineage — at sf0.1 that doubled the
+    // operator's cost.
+    val out = Materialize(labels)
     labels.unpersist()
     out
   }
@@ -779,13 +771,13 @@ object Dedup {
     val affected = stored.join(touched, Seq("lbl"))
     val starEdges = affected.filter(col("node") =!= col("lbl"))
       .select(col("node").as("_da"), col("lbl").as("_db"))
-    // localCheckpoint severs the subgraph from the stored table's plan
+    // Materialize severs the subgraph from the stored table's plan
     // before the iterative solver (whose loop re-resolves its input each
     // alternation — attribute lineage into a prior CC run's output does
-    // not survive that); bounded by construction: affected + delta rows
+    // not survive that)
     val subPairs = newPairs.select(col(aCol).as("_da"), col(bCol).as("_db"))
       .union(starEdges)
-      .localCheckpoint()
+      .transform(Materialize(_))
     val relabeled = dedupClustersStar(subPairs, "_da", "_db", maxIter)
     stored.join(touched, Seq("lbl"), "left_anti")
       .select("node", "lbl")
@@ -804,7 +796,7 @@ object Dedup {
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize(_))
 
     // large-star: per node u over the symmetric neighborhood,
     // m = min(N(u) ∪ {u}); emit (v, m) for the strictly-larger
@@ -858,7 +850,7 @@ object Dedup {
       // 2.20/2.46 lazy) — the saved block-read action is cheaper than
       // whatever the fused compute+probe job costs; reverted per the
       // checkpoint-pays rule.
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+      val next = Materialize(smallStar(largeStar(edges)))
       val s = sig(next)
       converged = s == prev
       prev = s
@@ -877,7 +869,7 @@ object Dedup {
       .select(col("u").as("node"), col("v").as("lbl"))
       .unionAll(edges.select(col("v"), col("v")).distinct()
         .toDF("node", "lbl"))
-    val out = labels.localCheckpoint(true)
+    val out = Materialize(labels)
     edges.unpersist()
     (out, iter)
   }
@@ -1150,7 +1142,7 @@ object Dedup {
       case None => base
     }
     // both self-join legs read the blocked frame; one materialization
-    val bl = blocked.localCheckpoint()
+    val bl = Materialize(blocked)
     val a = bl.select(col(idCol).as("a_id") +: col("_key").as("_ka") +:
       bNames.map(col): _*)
     val b = bl.select(col(idCol).as("b_id") +: col("_key").as("_kb") +:
@@ -1191,7 +1183,7 @@ object Dedup {
       case None => base
     }
     // both self-join legs read the blocked frame; one materialization
-    val bl = blocked.localCheckpoint()
+    val bl = Materialize(blocked)
     val a = bl.select(col(idCol).as("a_id") +: col("_key").as("_ka") +:
       bNames.map(col): _*)
     val b = bl.select(col(idCol).as("b_id") +: col("_key").as("_kb") +:
@@ -1235,7 +1227,7 @@ object Dedup {
     // feeds the totals plus both common-token legs — one doc-sized and
     // one token-sized materialization instead of re-running the block
     // projection 4x and the explode+count 3x (r16)
-    val bl = blocked.localCheckpoint()
+    val bl = Materialize(blocked)
     val pairs = bl.select(col(idCol).as("a_id") +: bNames.map(col): _*)
       .join(bl.select(col(idCol).as("b_id") +: bNames.map(col): _*),
         bNames)
@@ -1244,7 +1236,7 @@ object Dedup {
     val tf = bl
       .select(col(idCol), explode(split(col("_txt"), " ")).as("_t"))
       .groupBy(col(idCol), col("_t")).agg(count(lit(1)).as("_tf"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val tot = tf.groupBy(col(idCol)).agg(sum("_tf").as("_tot"))
     val common = pairs
       .join(tf.select(col(idCol).as("a_id"), col("_t"), col("_tf").as("_ca")),
@@ -1308,11 +1300,9 @@ object Dedup {
 
   def lexicalCosinePairs(docs: DataFrame, idCol: String, textCol: String,
                          minSim: Double, maxDf: Long): DataFrame = {
-    // materialized once (corpus-token-sized → fault-tolerant when a
-    // checkpoint dir is configured): the norm aggregate and both
-    // dot-product legs read the capped tf frame (3× tokenize + df-cap
-    // without it)
-    val tfc = Materialize.corpusFrame(
+    // materialized once: the norm aggregate and both dot-product legs
+    // read the capped tf frame (3× tokenize + df-cap without it)
+    val tfc = Materialize(
       cappedLexicalTf(docs, idCol, textCol, maxDf))
     val norms = lexicalNorms(tfc)
     val dots = tfc.select(col("tok"), col("doc_id").as("da"), col("tf").as("tfa"))
@@ -1437,7 +1427,7 @@ object Dedup {
     // is referenced twice here and `sym` three times downstream — without
     // the materialization the epsilon-neighborhood join executed up to
     // six times (r16 measurement); pairs are bounded by the epsilon graph
-    val p = pairs.localCheckpoint()
+    val p = Materialize(pairs)
     val sym = p.select(col(aCol).as("node"), col(bCol).as("nbr"))
       .union(p.select(col(bCol).as("node"), col(aCol).as("nbr")))
     val cores = sym.groupBy("node").agg(count(lit(1)).as("_n"))
@@ -1565,7 +1555,7 @@ object Dedup {
       .withColumn("_cov",
         greatest(col("_end") - greatest(col("span_start"), col("_run")),
           lit(0L)))
-      .localCheckpoint()
+      .transform(Materialize(_))
     val cuts = covered.groupBy(col(idCol))
       .agg(sum(col("_cov")).as("cut_words"))
     // kept text: words whose position falls in no unioned interval —

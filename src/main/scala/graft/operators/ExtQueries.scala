@@ -929,7 +929,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       // tables=32, bits=5: the measured-recall config from the comment
       // above — keep these literals adjacent so contract and code can't
       // drift (round-6 broke the build wiring this to a phantom helper).
@@ -1376,7 +1376,7 @@ object ExtQueries {
       val docs = t(s, d, "documents")
       val cands = Search.bm25Scores(docs, "doc_id", "text", SearchTerms)
         .orderBy(col("score").desc, col("doc_id")).limit(50)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val pairs = Dedup.lexicalCosinePairs(
         docs.join(cands.select("doc_id"), "doc_id"), "doc_id", "text",
         minSim = 0.9, maxDf = 1000L)
@@ -1640,7 +1640,7 @@ object ExtQueries {
           col("l_orderkey") === col("o_orderkey"))
         .filter(col("l_shipdate") > col("o_orderdate"))
         .select("l_orderkey", "l_suppkey").distinct()
-        .localCheckpoint()
+        .transform(Materialize(_))
       val multi = li.groupBy("l_orderkey")
         .agg(countDistinct("l_suppkey").as("_ns")).filter(col("_ns") >= 2)
         .select("l_orderkey")
@@ -2145,16 +2145,15 @@ object ExtQueries {
     // the q26 df-cap discipline against hot-gram skew (cap mirrored in
     // the oracle, so the screen is part of the contract).
     "q255_winnow_pairs" -> ((s, d) => {
-      // localCheckpoint (eager): the selected frame feeds the df
+      // Materialize (eager): the selected frame feeds the df
       // screen AND both sides of the pair join — lazy, the 65M-gram
       // explode + window would execute FOUR times in one plan
       // (measured 214 s vs 62 s for one selection pass at 100×; the
-      // rejectedIds technique). The frame is 2/(w+1) of the gram
-      // stream — batch-bounded, never corpus².
+      // rejectedIds technique).
       val sel = Dedup.winnowingFingerprints(t(s, d, "documents"),
           "doc_id", "text", k = WinnowK, w = WinnowW)
         .select(col("doc_id"), col("fp_hash")).distinct()
-        .localCheckpoint()
+        .transform(Materialize(_))
       val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
         .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
       val kept = sel.join(rare, "fp_hash")
@@ -2170,14 +2169,14 @@ object ExtQueries {
     // Segment-level winnowing match (r15 — verdict item 4): q255's
     // MOSS shape at SUB-document granularity, so a copied section
     // inside an otherwise-novel doc is caught AND located (which
-    // segment of which doc). Same df screen + localCheckpoint
+    // segment of which doc). Same df screen + Materialize
     // discipline as q255; the pair join carries (doc, segment) keys.
     "q262_winnow_segments" -> ((s, d) => {
       val sel = Dedup.winnowingSegmentFingerprints(t(s, d, "documents"),
           "doc_id", "text", segWords = SegWinnowWords,
           k = WinnowK, w = WinnowW)
         .select(col("doc_id"), col("seg_id"), col("fp_hash")).distinct()
-        .localCheckpoint()
+        .transform(Materialize(_))
       val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
         .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
       val kept = sel.join(rare, "fp_hash")
@@ -2204,7 +2203,7 @@ object ExtQueries {
         val sel = Dedup.winnowingFingerprints(t(s, d, "documents"),
             "doc_id", "text", k = WinnowK, w = WinnowW)
           .select(col("doc_id"), col("fp_hash")).distinct()
-          .localCheckpoint()
+          .transform(Materialize(_))
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
         val kept = sel.join(rare, "fp_hash")
@@ -2565,7 +2564,7 @@ object ExtQueries {
       val authority = Graph.pageRank(e, "src", "dst", PrIters, PrDamping)
         .select(col("node").as("reg_domain"),
           round(col("rank"), 4).as("rank"))
-        .localCheckpoint()
+        .transform(Materialize(_))
       val caps = authority.select(col("reg_domain"),
         (lit(5L) + floor(col("rank") * 8).cast("long")).as("cap"))
       val parts = Url.urlParts(
@@ -2664,11 +2663,11 @@ object ExtQueries {
           t(s, d, "documents").withColumn("url",
             Url.syntheticUrl(col("doc_id"), col("lang"))),
           col("url")),
-        BlockedDomains.toDF("reg_domain")).localCheckpoint()
+        BlockedDomains.toDF("reg_domain")).transform(Materialize(_))
       val keepExact = parts.groupBy(md5(col("text")).as("_h"))
         .agg(min("doc_id").as("doc_id")).select("doc_id")
       val s1 = parts.join(keepExact, Seq("doc_id"), "left_semi")
-        .localCheckpoint()
+        .transform(Materialize(_))
       // jaccardPairsAuto: the cost-based direct-vs-PPJoin dispatch
       // (q26's posture) — identical exact output either way
       val pairs = Dedup.jaccardPairsAuto(s1, "doc_id", "text",
@@ -2775,7 +2774,7 @@ object ExtQueries {
         val idx = docs.filter(col("doc_id") % 2 === 0)
         val sel = Dedup.winnowingFingerprints(idx, "doc_id", "text",
             WinnowK, WinnowW)
-          .select(col("doc_id"), col("fp_hash")).distinct().localCheckpoint()
+          .select(col("doc_id"), col("fp_hash")).distinct().transform(Materialize(_))
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
         Warehouse.save(Layout.Winnow, "graft_bench_wadmit_q257",
@@ -3611,7 +3610,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val (codes, centroids, codebook) = Similarity.ivfPqIndex(
         emb, "vec_id", "embedding", nlist = 16, subspaces = 16)
       Warehouse.save(Layout.IvfPq, "graft_bench_ivfpq_q214", codes, centroids,
@@ -3646,11 +3645,11 @@ object ExtQueries {
       // closure) AND re-read whole by the leak audit below — the pair
       // pipeline executed twice per run without this (r16)
       val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.6).select("da", "db").localCheckpoint()
+        n = 3, threshold = 0.6).select("da", "db").transform(Materialize(_))
       // assign is read by the census and both audit endpoint projections
       // (3×); one doc-sized materialization
       val assign = Pipeline.leakageSafeSplit(docs, "doc_id", pairs,
-        "da", "db", KFolds).localCheckpoint()
+        "da", "db", KFolds).transform(Materialize(_))
       val census = assign.groupBy("fold").agg(count(lit(1)).as("n_docs"),
         countDistinct("cluster").as("n_clusters"))
       val fa = assign.select(col("doc_id").as("da"), col("fold").as("_fa"),
@@ -3731,7 +3730,7 @@ object ExtQueries {
     "q218_source_overlap" -> ((s, d) => {
       // read by the per-source census and both containment-join legs
       val sh = Dedup.shingles(t(s, d, "documents"), "source", "text", n = 3)
-        .select(col("source"), col("shingle")).distinct().localCheckpoint()
+        .select(col("source"), col("shingle")).distinct().transform(Materialize(_))
       val cnt = sh.groupBy("source").agg(count(lit(1)).as("n"))
       val pairs = sh.select(col("source").as("src_a"), col("shingle"))
         .join(sh.select(col("source").as("src_b"), col("shingle")), "shingle")
@@ -3787,7 +3786,7 @@ object ExtQueries {
       // shingle pipeline executed four times per run without this (r16)
       val pairs = Dedup.ngramJaccardPairs(t(s, d, "documents"),
         "doc_id", "text", n = 3, threshold = 0.6).select("da", "db")
-        .localCheckpoint()
+        .transform(Materialize(_))
       val h = pmod(xxhash64(col("da"), col("db")), lit(2L))
       val stored = Dedup.dedupClustersStar(pairs.filter(h === 0L), "da", "db")
       Dedup.dedupClustersAugment(stored, pairs.filter(h === 1L), "da", "db")
@@ -4112,7 +4111,7 @@ object ExtQueries {
         .select(col("doc_id"), lit(true).as("ngram"))
       // read by the vocab restriction, the dot join, and the norms (3×)
       val ctf = Dedup.cappedLexicalTf(corpus, "doc_id", "text",
-        maxDf = 400L).localCheckpoint()
+        maxDf = 400L).transform(Materialize(_))
       val lex = Dedup.lexicalCosineAgainst(holdout, "doc_id", "text",
           ctf, Dedup.lexicalNorms(ctf), minSim = 0.8)
         .select(col("corpus_id").as("doc_id")).distinct()
@@ -4262,7 +4261,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       ensureStoredIndex("graft_bench_ivf_q232", d) {
         val (cells, centroids) =
           Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
@@ -4419,7 +4418,7 @@ object ExtQueries {
       // materialization instead of two lineitem scans + median joins
       val dev = v.join(med, "grp")
         .withColumn("dev", abs(col("c") - col("med")))
-        .localCheckpoint()
+        .transform(Materialize(_))
       val mad = dev.groupBy("grp")
         .agg(expr("percentile(dev, 0.5)").as("mad"))
       dev.join(mad, "grp")
@@ -4951,7 +4950,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val (cells, centroids) =
         Similarity.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
       Warehouse.save(Layout.Ivf, "graft_bench_ivf_q53", cells, centroids)
@@ -4984,7 +4983,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val (codes, params) = Similarity.sq8Index(emb, "vec_id", "embedding")
       Warehouse.save(Layout.Sq8, "graft_bench_sq8_q117", codes, params)
       storedIndexOwner.put("graft_bench_sq8_q117", d)
@@ -5018,7 +5017,7 @@ object ExtQueries {
         // the exact top-3 frame is read twice (recall-hit join + the
         // emitted rows); one 15-row materialization instead of two
         // full-corpus cosine scans (r16)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val pq = Similarity.pqCosineTopK(emb, probes, "vec_id", "embedding",
           k = 3, candidates = 150)
         .select(col("probe_id"), col("nn_id"))
@@ -5484,7 +5483,7 @@ object ExtQueries {
         val sel = Dedup.winnowingFingerprints(t(s, d, "documents"),
             "doc_id", "text", k = WinnowK, w = WinnowW)
           .select(col("doc_id"), col("fp_hash")).distinct()
-          .localCheckpoint()
+          .transform(Materialize(_))
         val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
           .filter(col("_df") <= WinnowMaxDf).select("fp_hash")
         val kept = sel.join(rare, "fp_hash")

@@ -30,8 +30,8 @@ object Graph {
    * Scale shape: per iteration ONE shuffle join of the edge frame
    * against the node-keyed rank frame plus one dst-keyed aggregation
    * (map-side partials) — the textbook distributed PageRank step. The
-   * derived frames are MATERIALIZED before the loop (`localCheckpoint`,
-   * the [[kCore]] / [[Dedup.dedupClusters]] discipline): `eDeg` embeds
+   * derived frames are MATERIALIZED before the loop (the [[kCore]] /
+   * [[Dedup.dedupClusters]] discipline): `eDeg` embeds
    * the fact-join + distinct + degree derivation, and an unsevered loop
    * would re-embed that whole subplan once PER ITERATION — at 100× the
    * scan bill multiplies by the iteration count. Each iteration's
@@ -49,14 +49,14 @@ object Graph {
     // distinct edge set is materialized first, and every derived frame
     // (degree, node set) reads the checkpointed blocks
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize(_))
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct()
-      .localCheckpoint()
+      .transform(Materialize(_))
     val outDeg = e.groupBy("_src").agg(count(lit(1)).as("_deg"))
     // degree attached once and MATERIALIZED; every iteration reuses the
     // checkpointed blocks, never the upstream fact-join lineage
-    val eDeg = e.join(outDeg, "_src").localCheckpoint()
+    val eDeg = e.join(outDeg, "_src").transform(Materialize(_))
     var ranks = nodes.withColumn("rank", lit(1.0))
     for (i <- 1 to iterations) {
       val contribs = eDeg
@@ -73,7 +73,7 @@ object Graph {
       // Checkpoint only every 4th round: plan-size insurance for long
       // runs without paying a full materialization job per round (r16:
       // per-round eager checkpoints were ~1/3 of q118's wall time).
-      if (i % 4 == 0 && i < iterations) ranks = ranks.localCheckpoint()
+      if (i % 4 == 0 && i < iterations) ranks = Materialize(ranks)
     }
     ranks
   }
@@ -116,7 +116,7 @@ object Graph {
     val und = edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      .filter(col("u") =!= col("v")).distinct().transform(Materialize(_))
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("_d"))
@@ -131,7 +131,7 @@ object Graph {
         struct(col("u").as("a"), col("v").as("b")))
         .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("_e"))
       .select(col("_e.a").as("a"), col("_e.b").as("b"))
-      .localCheckpoint()
+      .transform(Materialize(_))
     // Deliberately NO shuffle-hash hint here (r17 A/B): orientation
     // already bounds the wedge legs, and the hint measured a wash both
     // scales (sf0.1 q128 1.81 -> 1.93 s, 10x q128_tri 3.03/2.70 ->
@@ -225,7 +225,7 @@ object Graph {
     // third time — without the checkpoint the caller's edge lineage (for
     // q209, the orders⋈lineitem fact join) executed three times
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize(_))
     // left leg of the wedge join, optionally stripped of hot middles;
     // filtering ONE leg removes the hub's wedges entirely (the join is
     // keyed on b), so the other leg needs no second anti-join pass
@@ -286,7 +286,7 @@ object Graph {
    * semi-filter applied to both endpoints (two shuffle joins); the
    * convergence probe is an edge COUNT (a node leaves iff an edge
    * leaves, so edge-count stability == node fixpoint) — one cheap
-   * action, no driver-side data. `localCheckpoint` severs each round's
+   * action, no driver-side data. [[Materialize]] severs each round's
    * lineage (the [[graft.operators.Dedup.dedupClusters]] discipline:
    * iteration-grown plans re-resolve super-linearly otherwise). Peel
    * depth is data-dependent but shallow on real graphs (2 rounds on
@@ -307,7 +307,7 @@ object Graph {
     // change measured 17-20% slower at 10x — keep the measured-safe
     // eager form (the checkpoint-pays rule; see dedupClusters).
     var cur = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var prevEdges = cur.count()
     var converged = prevEdges == 0L
     var it = 0
@@ -318,7 +318,7 @@ object Graph {
         .join(keep, "a")
         .join(keep.withColumnRenamed("a", "b"), "b")
         .select("a", "b")
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       val n = cur.count()
       converged = n == prevEdges || n == 0L
       prevEdges = n
@@ -348,7 +348,7 @@ object Graph {
    * fixed-round trajectory is engine-reproducible and the oracle
    * unrolls it CTE for CTE (the q238 posture). Fixed `iters` keeps the
    * plan a finite join chain (the PageRank rule — no driver
-   * convergence probe); each round's labels localCheckpoint so lineage
+   * convergence probe); each round's labels materialize so lineage
    * cannot compound (the q118 lesson).
    *
    * Scale shape: per round ONE edge⋈labels shuffle join + one
@@ -362,7 +362,7 @@ object Graph {
     require(iters >= 0, s"labelPropagation needs iters >= 0, got $iters")
     val edges = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
       .unionAll(pairs.select(col(bCol).as("x"), col(aCol).as("y")))
-      .localCheckpoint()
+      .transform(Materialize(_))
     var labels = edges.select(col("x").as("node")).distinct()
       .withColumn("lbl", col("node"))
     for (i <- 1 to iters) {
@@ -377,7 +377,7 @@ object Graph {
         .select(col("node"), col("_v.l").as("lbl"))
       // single-reference rounds chain lazily (the pageRank rule); every
       // 4th round checkpoints as plan-size insurance for long runs
-      if (i % 4 == 0 && i < iters) labels = labels.localCheckpoint()
+      if (i % 4 == 0 && i < iters) labels = Materialize(labels)
     }
     labels
   }

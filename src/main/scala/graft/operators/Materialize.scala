@@ -3,47 +3,34 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /**
- * Materialization posture for multi-consumed frames — one place that
- * decides HOW a reuse point is made durable, so operators state only
- * THAT a frame is multi-consumed.
+ * The one place a frame is materialized. Operators state only THAT a
+ * frame is multi-consumed (or that its lineage must be cut); the rule
+ * for HOW lives here, so a deployment sets it once for every site.
  *
- * Semantics note (applies to every operator that calls this or
- * `localCheckpoint` directly — the pair builders, `triangleCount`,
- * `twoHopReach`, the CC loops): builders are EAGER AT BUILD — merely
- * constructing the returned DataFrame runs the Spark jobs that
- * materialize the checkpointed frames, and plan-only tooling
- * (`graft.Explain` without `-exec`) therefore executes those subtrees
- * too. This is deliberate: the frames are multi-consumed, and a lazy
- * plan would re-run their corpus-sized lineage once per consumer.
+ * `Materialize(df)` cuts the lineage and materializes the frame
+ * EAGERLY — merely constructing a frame that calls it runs the Spark
+ * job, so plan-only tooling (`graft.Explain` without `-exec`) executes
+ * those subtrees too. This is deliberate: a lazy plan would re-run the
+ * lineage once per consumer.
+ *
+ *  - With a checkpoint dir (`SparkContext.setCheckpointDir`, or
+ *    `spark.checkpoint.dir` at submit) it uses RELIABLE `checkpoint()`:
+ *    the rows live on the checkpoint filesystem and survive executor
+ *    loss. `localCheckpoint` truncates the lineage that recovery would
+ *    need, so a lost executor otherwise kills the job. The files are
+ *    freed when the frame is garbage-collected
+ *    (`spark.cleaner.referenceTracking.cleanCheckpoints`, set by
+ *    [[graft.GraftSession]]) — the lifetime local blocks already have.
+ *  - Without one (local runs, the bench, the specs) it uses
+ *    `localCheckpoint()`: executor-local MEMORY_AND_DISK blocks.
+ *
+ * Both paths compute the lineage ONCE: the eager reliable checkpoint
+ * writes the files in the same job that computes the rows
+ * (MaterializeSpec pins one evaluation per row). Results are identical;
+ * only the storage contract differs.
  */
 object Materialize {
-
-  /**
-   * Cut lineage and materialize a CORPUS-SIZED multi-consumed frame
-   * (shingle/tf/segment frames — linear in corpus tokens), honoring the
-   * session's fault-tolerance posture:
-   *
-   *  - with a configured checkpoint dir
-   *    (`SparkContext.setCheckpointDir` / `spark.checkpoint.dir` at
-   *    submit), uses RELIABLE `checkpoint()` — blocks live on the
-   *    checkpoint filesystem and survive executor loss, the right
-   *    posture for corpus-token-sized frames on preemptible /
-   *    dynamic-allocation clusters (a lost executor otherwise kills
-   *    the job instead of recomputing, because localCheckpoint
-   *    truncates the lineage that recovery would need);
-   *  - without one (local runs, the bench), `localCheckpoint()` —
-   *    executor-local MEMORY_AND_DISK blocks, no extra write pass.
-   *
-   * Results are identical on both paths (one compute of the lineage,
-   * N reads); only the storage contract differs. The reliable path
-   * pays one extra pass to write the checkpoint files — write-once
-   * fault tolerance, the cluster operator's explicit opt-in.
-   *
-   * Bounded pair/edge/top-k frames keep plain `localCheckpoint`: losing
-   * them re-runs a bounded pipeline, not a corpus scan, so the write
-   * pass would cost more than the exposure.
-   */
-  def corpusFrame(df: DataFrame): DataFrame =
+  def apply(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint()
     else df.localCheckpoint()

@@ -266,7 +266,7 @@ object Pipeline {
     // each re-read re-ran the quality gate (entropy + stopword scan over
     // every doc — the most expensive scalar in this pipeline, r16)
     val exact = gated.join(minIds, Seq(idCol), "left_semi")
-      .localCheckpoint()
+      .transform(Materialize(_))
     val pairs = Dedup.ngramJaccardPairs(exact, idCol, textCol,
       n = 3, threshold = jaccardThreshold)
     val drop = Dedup.dedupClustersStar(pairs, "da", "db")
@@ -476,7 +476,7 @@ object Pipeline {
         col("col").as("seg"))
       // read by the df census and the join side; one materialization of
       // the segment explode instead of two (r16)
-      .localCheckpoint()
+      .transform(Materialize(_))
     val df = segs.select(col("seg"), col(idCol)).distinct()
       .groupBy("seg").agg(count(lit(1)).as("_nd"))
     segs.join(df, Seq("seg"))

@@ -1581,7 +1581,7 @@ object Similarity {
         .select("label", "centroid")
         // k-row result, eagerly materialized so the cache can drop —
         // nothing stays persisted past the call (the dedupClusters rule)
-        .localCheckpoint()
+        .transform(Materialize(_))
     } finally ex.unpersist()
   }
 

@@ -411,7 +411,7 @@ object Url {
     // the caller's parse lineage is read by the domain projection, the
     // exact-dup census, the pair dispatch sample, and the pair pipeline
     // itself (~4×, r16) — one doc-sized materialization
-    val p = parts.localCheckpoint()
+    val p = Materialize(parts)
     val dom = p.select(col(idCol), col("reg_domain"))
     val exact = p
       .groupBy(col("reg_domain"), md5(col(textCol)).as("_h"))

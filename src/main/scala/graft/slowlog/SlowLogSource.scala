@@ -141,34 +141,6 @@ object SlowLogSource {
     events.toDF("file", "event").select(col("file"), col("event.*"))
   }
 
-  /** [[readRaw]] minus the cross-record session-carry fill — the
-    * ScaleBench decomposition hook (SCALE.md §19: attribute the
-    * ingest_flatten exponent between the parse scan and the carry
-    * window's full-width exchange). NOT a public reading path: `db`
-    * and the rate columns stay null wherever the event had no explicit
-    * marker. */
-  private[graft] def readRawNoCarry(spark: SparkSession,
-                                    path: String): DataFrame = {
-    import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", Delim)
-    val hrdd = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .asInstanceOf[NewHadoopRDD[LongWritable, Text]]
-    val events = hrdd.mapPartitionsWithInputSplit { (split, iter) =>
-      val file = split.asInstanceOf[FileSplit].getPath.toString
-      iter.flatMap { case (k, v) =>
-        val off = k.get()
-        val (text, base) =
-          if (off == 0L) (v.toString, 0L)
-          else ("# Time: " + v.toString, math.max(0L, off - DelimPrefixBytes))
-        SlowLogParser.parseString(text, base).map(e => (file, e))
-      }
-    }
-    events.toDF("file", "event").select(col("file"), col("event.*"))
-  }
-
   /** Typed event stream with reference (sequential-carry) semantics. */
   def read(spark: SparkSession, path: String): Dataset[SlowLogEvent] = {
     import spark.implicits._

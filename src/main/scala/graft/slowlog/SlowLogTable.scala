@@ -10,13 +10,12 @@ import org.apache.spark.sql.functions._
  * 0 / false (the reference's fixed ClickHouse schema declared NOT NULL
  * defaults).
  *
- * The fingerprint runs as a Scala UDF for now; it is a pure
- * `String => String` and deliberately kept regex-free in the hot path so
- * it can be lifted into a codegen'd Catalyst Expression if the bench
- * shows it dominating ingest (SURVEY.md §7 decision ledger). The digest
- * is pure built-ins (`upper(substring(md5(fp), 17, 16))` — the last 16
- * hex chars, pt make_checksum semantics) and stays inside whole-stage
- * codegen.
+ * The fingerprint is the codegen'd `FingerprintExpr` ([[fingerprintCol]]);
+ * `fingerprintUdf` wraps the same pure, regex-free `String => String` as a
+ * Scala UDF and stays as the parity reference (SURVEY.md §7 decision
+ * ledger). The digest is pure built-ins (`upper(substring(md5(fp), 17,
+ * 16))` — the last 16 hex chars, pt make_checksum semantics) and stays
+ * inside whole-stage codegen.
  */
 object SlowLogTable {
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.util.Try
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 import graft.sources.{Layout, Warehouse}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -210,20 +210,19 @@ object StreamingDedup {
           .select(col("node").as(idCol))
         val repBands = bands.join(dropWithin, Seq(idCol), "left_anti")
         // vs the standing index: reject anything already admitted.
-        // localCheckpoint (eager) SEVERS the plan from the index table
+        // Materialize (eager) SEVERS the plan from the index table
         // before we append to it below — a lazy plan would re-probe the
         // table at output-write time, find the survivors' own
         // just-appended bands, and self-reject every admitted document
         // (persist() is not enough: the table append recaches dependent
-        // plans). Checkpointed rows are (id, sh, band, key) — scalar,
-        // batch-sized, never corpus-sized.
+        // plans).
         val survivorBands = (
           if (spark.catalog.tableExists(indexTable)) {
             val hit = Dedup.simHashMatchesAgainst(
               repBands, spark.table(indexTable), idCol, maxHamming)
             repBands.join(hit, Seq(idCol), "left_anti")
           } else repBands
-        ).localCheckpoint()
+        ).transform(Materialize(_))
         val survivorIds = survivorBands.select(idCol).distinct()
         val survivors = b.join(survivorIds, Seq(idCol), "left_semi")
         commitAdmission(survivors, outPath, batchId, appendIdx)
@@ -304,11 +303,10 @@ object StreamingDedup {
         // surviving band rows): a document with fewer than n words has
         // NO shingles and therefore no band rows, but it is not a
         // duplicate of anything and must still be admitted.
-        // localCheckpoint SEVERS the rejected-id plan from the index
+        // Materialize SEVERS the rejected-id plan from the index
         // tables before the append below, exactly as the SimHash path
         // documents (a lazy plan would re-probe the tables post-append
-        // and self-reject every admitted document); the frame is an id
-        // list, batch-bounded, never corpus-sized.
+        // and self-reject every admitted document).
         val rejectedIds = (
           if (spark.catalog.tableExists(indexTable)) {
             val hit = Dedup.minHashMatchesAgainst(
@@ -317,7 +315,7 @@ object StreamingDedup {
               idCol, threshold)
             dropWithin.union(hit)
           } else dropWithin
-        ).localCheckpoint()
+        ).transform(Materialize(_))
         val survivors = b.join(rejectedIds, Seq(idCol), "left_anti")
         commitAdmission(survivors, outPath, batchId, appendIdx)
       } finally { bands.unpersist(); sh.unpersist() }
@@ -392,9 +390,9 @@ object StreamingDedup {
         .filter(col("node") =!= col("lbl"))
         .select(col("node").as(idCol))
       val reps = b.join(dropWithin, Seq(idCol), "left_anti")
-      // vs the standing index; localCheckpoint severs the rejected-id
+      // vs the standing index; Materialize severs the rejected-id
       // plan from the index tables before the append (the MinHash
-      // path's self-rejection hazard) — an id list, batch-bounded
+      // path's self-rejection hazard)
       val rejectedIds = (
         if (spark.catalog.tableExists(indexTable)) {
           val hit = Dedup.lexicalCosineAgainst(reps, idCol, textCol,
@@ -403,7 +401,7 @@ object StreamingDedup {
             .select(col("probe_id").as(idCol)).distinct()
           dropWithin.union(hit)
         } else dropWithin
-      ).localCheckpoint()
+      ).transform(Materialize(_))
       val survivors = b.join(rejectedIds, Seq(idCol), "left_anti")
       commitAdmission(survivors, outPath, batchId, appendIdx)
     } finally b.unpersist()
@@ -472,7 +470,7 @@ object StreamingDedup {
         .select(col("node").as(idCol))
       val reps = b.join(dropWithin, Seq(idCol), "left_anti")
       // vs the standing index: shared bucket → exact cosine ≥ threshold
-      // (raw embeddings ride the stored frame); localCheckpoint severs
+      // (raw embeddings ride the stored frame); Materialize severs
       // the rejected-id plan from the index table before the append
       val rejectedIds = (
         if (spark.catalog.tableExists(indexTable)) {
@@ -486,7 +484,7 @@ object StreamingDedup {
             .select(col("_pid").as(idCol)).distinct()
           dropWithin.union(hit)
         } else dropWithin
-      ).localCheckpoint()
+      ).transform(Materialize(_))
       val survivors = b.join(rejectedIds, Seq(idCol), "left_anti")
       commitAdmission(survivors, outPath, batchId, appendIdx)
     } finally b.unpersist()
@@ -585,9 +583,9 @@ object StreamingDedup {
               .join(sizes.withColumnRenamed("doc_id", "_pid"), "_pid")
               .filter(col("_common") >= col("_n") * threshold)
               .select(col("_pid").as(idCol)).distinct()
-            dropWithin.union(hit).localCheckpoint()
+            dropWithin.union(hit).transform(Materialize(_))
           } finally probed.unpersist()
-        } else dropWithin.localCheckpoint()
+        } else Materialize(dropWithin)
       )
       val survivors = b.join(rejectedIds, Seq(idCol), "left_anti")
       commitAdmission(survivors, outPath, batchId, appendIdx)
@@ -637,14 +635,14 @@ object StreamingDedup {
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     // screened selection of a frame — the batch is its own small
-    // corpus for the df cap (the lexicalAdmission precedent); eager
-    // localCheckpoint because the selection feeds the screen AND every
+    // corpus for the df cap (the lexicalAdmission precedent);
+    // materialized because the selection feeds the screen AND every
     // downstream consumer (the q255 four-executions lesson)
     def selOf(s: DataFrame): DataFrame = {
       val sel = graft.operators.Dedup
         .winnowingFingerprints(s, idCol, textCol, k, w)
         .select(col(idCol), col("fp_hash")).distinct()
-        .localCheckpoint()
+        .transform(Materialize(_))
       val rare = sel.groupBy("fp_hash").agg(count(lit(1)).as("_df"))
         .filter(col("_df") <= maxDf).select("fp_hash")
       sel.join(rare, "fp_hash")
@@ -659,7 +657,7 @@ object StreamingDedup {
       return
     val b = batch.persist()
     try {
-      val kept = selOf(b).localCheckpoint()
+      val kept = Materialize(selOf(b))
       // within-batch: one representative per shared-fingerprint cluster
       val pairs = kept.select(col(idCol).as("da"), col("fp_hash"))
         .join(kept.select(col(idCol).as("db"), col("fp_hash")), "fp_hash")
@@ -682,7 +680,7 @@ object StreamingDedup {
             .select(col("probe_id").as(idCol)).distinct()
           dropWithin.union(hit)
         } else dropWithin
-      ).localCheckpoint()
+      ).transform(Materialize(_))
       val survivors = b.join(rejectedIds, Seq(idCol), "left_anti")
       commitAdmission(survivors, outPath, batchId, appendIdx)
     } finally b.unpersist()
@@ -829,7 +827,7 @@ object StreamingDedup {
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("reg_domain")
           .orderBy(md5(col(idCol).cast("string")), col(idCol))))
-      // localCheckpoint (eager): the decision's lineage READS the
+      // Materialize (eager): the decision's lineage READS the
       // standing counts table that commitAdmission is about to APPEND
       // to — left lazy, the output write would re-plan against the
       // post-append counts and the batch's own quota would deduct
@@ -839,7 +837,7 @@ object StreamingDedup {
         .filter(col("_rk") <=
           greatest(lit(cap) - coalesce(col("n_used"), lit(0L)), lit(0L)))
         .select(idCol)
-        .localCheckpoint()
+        .transform(Materialize(_))
       val survivors = b.join(admitIds, Seq(idCol), "left_semi")
       commitAdmission(survivors, outPath, batchId, appendCounts)
     } finally b.unpersist()
@@ -910,7 +908,7 @@ object StreamingDedup {
           .partitionBy("url_key")
           .orderBy(md5(col(idCol).cast("string")), col(idCol))))
         .filter(col("_rk") === 1).drop("_rk")
-      // vs the standing index — localCheckpoint severs the decision's
+      // vs the standing index — Materialize severs the decision's
       // lineage from the table the commit appends to (the simhash
       // axis's self-rejection lesson)
       val admitIds = (
@@ -918,7 +916,7 @@ object StreamingDedup {
           winners.join(spark.table(keysTable).select("url_key"),
             Seq("url_key"), "left_anti")
         else winners
-      ).select(idCol).localCheckpoint()
+      ).select(idCol).transform(Materialize(_))
       val survivors = b.join(admitIds, Seq(idCol), "left_semi")
       commitAdmission(survivors, outPath, batchId, appendKeys)
     } finally b.unpersist()
