@@ -59,13 +59,22 @@ object Ingest {
       tail: Boolean = false,
       checkpoint: Option[String] = None)
 
+  /** A flag's integer value; a bad one fails naming the flag. */
+  private[graft] def int(flag: String, v: String): Int =
+    try v.toInt catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"$flag expects an integer, got '$v'")
+    }
+
+  /** A flag's numeric value; a bad one fails naming the flag. */
+  private[graft] def double(flag: String, v: String): Double =
+    try v.toDouble catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"$flag expects a number, got '$v'")
+    }
+
   /** Parse reference-style `-flag value` pairs. */
   def parseArgs(args: Array[String]): Config = {
-    def int(flag: String, v: String): Int =
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$flag expects an integer, got '$v'")
-      }
     def loop(rest: List[String], c: Config): Config = rest match {
       case Nil => c
       case "-slowLogPath" :: v :: t => loop(t, c.copy(slowLogPath = v))

@@ -97,13 +97,15 @@ object Report {
     def loop(rest: List[String], c: Config): Config = rest match {
       case "-source" :: v :: t => loop(t, c.copy(source = v))
       case "-report" :: v :: t => loop(t, c.copy(report = v))
-      case "-top" :: v :: t => loop(t, c.copy(top = v.toInt))
+      case "-top" :: v :: t => loop(t, c.copy(top = Ingest.int("-top", v)))
       case "-bucket" :: v :: t => loop(t, c.copy(bucket = v))
-      case "-apdexT" :: v :: t => loop(t, c.copy(apdexT = Some(v.toDouble)))
+      case "-apdexT" :: v :: t =>
+        loop(t, c.copy(apdexT = Some(Ingest.double("-apdexT", v))))
       case "-splitAt" :: v :: t => loop(t, c.copy(splitAt = Some(v)))
       case "-since" :: v :: t => loop(t, c.copy(since = Some(v)))
       case "-until" :: v :: t => loop(t, c.copy(until = Some(v)))
-      case "-threshold" :: v :: t => loop(t, c.copy(threshold = v.toDouble))
+      case "-threshold" :: v :: t =>
+        loop(t, c.copy(threshold = Ingest.double("-threshold", v)))
       case "-digest" :: v :: t => loop(t, c.copy(digestId = Some(v)))
       case Nil => c
       case other :: _ =>

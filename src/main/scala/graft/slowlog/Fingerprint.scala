@@ -25,19 +25,16 @@ import java.util.Locale
  *  - administrator commands pass through unchanged;
  *  - trailing semicolons stripped.
  *
- * Implemented as a single char-scan (no regex in the hot path except the
- * two list-collapse rewrites on the already-normalized string), so it can
- * later be lifted into a codegen'd Catalyst Expression unchanged.
+ * Implemented as one char-scan that normalizes, then hand-written
+ * rewrite scans over the normalized string for the IN-list, VALUES-list
+ * and LIMIT collapses (exact twins of the regexes they replaced, fuzzed
+ * against them in `SlowLogScannerSpec`). Three regexes remain, each
+ * behind a substring test that most statements fail: the percona-toolkit
+ * comment (only when a block comment opens), the ORDER BY ASC drop (only
+ * when ` asc` occurs) and CALL (only for statements starting `call `).
  */
 object Fingerprint {
 
-  private val InList =
-    """\bin\s*\(\s*\?(?:\s*,\s*\?)*\s*\)""".r
-  private val ValuesList =
-    """\bvalues?\s*\(\s*\?(?:\s*,\s*\?)*\s*\)(?:\s*,\s*\(\s*\?(?:\s*,\s*\?)*\s*\))*""".r
-  // pt-query-digest rule: "LIMIT ?, ?" / "LIMIT ? OFFSET ?" → "limit ?"
-  private val LimitClause =
-    """\blimit \?(?:\s*,\s*\?|\s+offset\s+\?)""".r
   // pt-query-digest rule: redundant ASC in ORDER BY is dropped
   private val OrderByAsc =
     """(\border by [^;]*?)\s+asc\b""".r
@@ -57,10 +54,14 @@ object Fingerprint {
   def fingerprint(query: String): String = {
     if (query == null) return null
     val trimmed = query.trim
-    if (trimmed.toLowerCase(Locale.ROOT).startsWith("administrator command:"))
+    // only an a/A lower-cases to a leading 'a', so the test skips the
+    // lower-cased copy on every other statement
+    if (trimmed.nonEmpty && (trimmed.charAt(0) | 0x20) == 'a' &&
+        trimmed.toLowerCase(Locale.ROOT).startsWith("administrator command:"))
       return stripTrailingSemis(trimmed)
     if (trimmed.startsWith(MysqldumpPrefix)) return "mysqldump"
-    if (PtToolkitComment.findFirstIn(trimmed).isDefined) return "percona-toolkit"
+    if (trimmed.contains("/*") && PtToolkitComment.findFirstIn(trimmed).isDefined)
+      return "percona-toolkit"
 
     val n  = trimmed.length
     val sb = new StringBuilder(n)
@@ -226,18 +227,14 @@ object Fingerprint {
     }
 
     var out = sb.result().trim
-    // The rewrite regexes cost a full scan each (the ASC fixpoint, two);
-    // on the ingest hot path guard each with a cheap substring test that
-    // is NECESSARY for its pattern to match: every collapse needs a `?`,
-    // ValuesList needs "value", LimitClause literally contains
-    // "limit ?", OrderByAsc's \s+asc is " asc" post-normalization
-    // (whitespace is single spaces by now), CallStmt anchors at "call ".
+    // Each rewrite is guarded by a cheap substring test that is NECESSARY
+    // for it to match: every collapse needs a `?`, OrderByAsc's \s+asc is
+    // " asc" post-normalization (whitespace is single spaces by now),
+    // CallStmt anchors at "call ".
     if (out.indexOf('?') >= 0) {
-      out = InList.replaceAllIn(out, "in(?+)")
-      if (out.contains("value"))
-        out = ValuesList.replaceAllIn(out, "values(?+)")
-      if (out.contains("limit ?"))
-        out = LimitClause.replaceAllIn(out, "limit ?")
+      out = collapseInClauses(out)
+      out = collapseValuesRows(out)
+      out = collapseLimitPair(out)
     }
     if (out.contains(" asc")) {
       var prev: String = null
@@ -256,6 +253,92 @@ object Fingerprint {
       (out.startsWith("use ") && out.indexOf(' ', 4) < 0) ||
       (out.startsWith("use`") && out.indexOf(' ') < 0)
     if (useRewrite) "use ?" else out
+  }
+
+  /** Every `in (?, ?, ...)` whose `in` starts a word → `in(?+)`; the
+    * rewrite `\bin\s*\(\s*\?(?:\s*,\s*\?)*\s*\)` → `in(?+)` made. */
+  private[slowlog] def collapseInClauses(s: String): String =
+    rewrite(s, "in", "in(?+)") { k =>
+      placeholdersEnd(s, Scan.skipSpace(s, k + 2))
+    }
+
+  /** Single- and multi-row `values (?, ?), (?)` (or `value`) → `values(?+)`;
+    * the rewrite of `\bvalues?` + a placeholder row + any number of
+    * `,` + placeholder row. */
+  private[slowlog] def collapseValuesRows(s: String): String =
+    rewrite(s, "value", "values(?+)") { k =>
+      val v = k + "value".length
+      val withS = if (v < s.length && s.charAt(v) == 's') rowsEnd(s, v + 1) else -1
+      if (withS >= 0) withS else rowsEnd(s, v)
+    }
+
+  /** pt-query-digest rule: `limit ?, ?` / `limit ? offset ?` →
+    * `limit ?`; the rewrite `\blimit \?(?:\s*,\s*\?|\s+offset\s+\?)`. */
+  private[slowlog] def collapseLimitPair(s: String): String =
+    rewrite(s, "limit ?", "limit ?") { k =>
+      val i = k + "limit ?".length
+      val j = Scan.skipSpace(s, i)
+      val afterOffset = j + "offset".length
+      val q =
+        if (j < s.length && s.charAt(j) == ',') Scan.skipSpace(s, j + 1)
+        else if (j > i && s.startsWith("offset", j) &&
+                 Scan.skipSpace(s, afterOffset) > afterOffset) Scan.skipSpace(s, afterOffset)
+        else -1
+      if (q >= 0 && q < s.length && s.charAt(q) == '?') q + 1 else -1
+    }
+
+  /** Replace, left to right and without overlap, every match that starts
+    * with `word` at a word boundary and ends where `matchEnd(start)` says
+    * (-1: no match there) — `Regex.replaceAllIn` for patterns that start
+    * `\b` + a literal word. */
+  private def rewrite(s: String, word: String, replacement: String)(
+      matchEnd: Int => Int): String = {
+    var out: java.lang.StringBuilder = null
+    var copied = 0
+    var k = s.indexOf(word)
+    while (k >= 0) {
+      val end = if (Scan.wordBefore(s, k)) -1 else matchEnd(k)
+      if (end >= 0) {
+        if (out == null) out = new java.lang.StringBuilder(s.length)
+        out.append(s, copied, k).append(replacement)
+        copied = end
+        k = s.indexOf(word, end)
+      } else k = s.indexOf(word, k + 1)
+    }
+    if (out == null) s else out.append(s, copied, s.length).toString
+  }
+
+  /** End of a placeholder row `\(\s*\?(?:\s*,\s*\?)*\s*\)` at `i`, or -1. */
+  private def placeholdersEnd(s: String, i: Int): Int = {
+    val n = s.length
+    if (i >= n || s.charAt(i) != '(') return -1
+    var j = Scan.skipSpace(s, i + 1)
+    if (j >= n || s.charAt(j) != '?') return -1
+    j += 1
+    var more = true
+    while (more) {
+      val comma = Scan.skipSpace(s, j)
+      val q = if (comma < n && s.charAt(comma) == ',') Scan.skipSpace(s, comma + 1) else n
+      if (q < n && s.charAt(q) == '?') j = q + 1 else more = false
+    }
+    j = Scan.skipSpace(s, j)
+    if (j < n && s.charAt(j) == ')') j + 1 else -1
+  }
+
+  /** End of `\s*` + a placeholder row + any number of `\s*,\s*` + row,
+    * at `i`, or -1. */
+  private def rowsEnd(s: String, i: Int): Int = {
+    var end = placeholdersEnd(s, Scan.skipSpace(s, i))
+    var more = end >= 0
+    while (more) {
+      val comma = Scan.skipSpace(s, end)
+      val next =
+        if (comma < s.length && s.charAt(comma) == ',')
+          placeholdersEnd(s, Scan.skipSpace(s, comma + 1))
+        else -1
+      if (next >= 0) end = next else more = false
+    }
+    end
   }
 
   private def stripTrailingSemis(s: String): String = {

@@ -30,27 +30,31 @@ import scala.collection.mutable
  * Known line-level ambiguity, shared with any line-based slow-log parser:
  * a *line* inside a quoted SQL string that itself starts with `# ` is
  * indistinguishable from a header line.
+ *
+ * The lines every event carries — metric lines, `User@Host`, a canonical
+ * ISO `# Time:` — are read by hand-written scanners (end of this object)
+ * that return exactly what the regexes they replaced matched; those
+ * regexes live on as references in `SlowLogScannerSpec`. Four regexes
+ * remain, each on lines that are rare or pre-filtered: old-format and
+ * non-canonical ISO `# Time:` values, the combined `Rate_limit:` shape
+ * (only on lines containing `Rate_lim`), and `SET timestamp` / `use`
+ * (only on lines outside a statement whose first word is `set` / `use`).
  */
 object SlowLogParser {
 
   private val OldTime =
     """^#\s+Time:\s+(\d{6})\s+(\d{1,2}):(\d{2}):(\d{2})(?:\.(\d+))?\s*$""".r
-  private val UserHost =
-    """^#\s+User@Host:\s*([^\[\s]*)(?:\[([^\]]*)\])?\s*@\s*([^\s\[]*)\s*(?:\[([^\]]*)\])?(?:.*?\bId:\s*(\d+))?\s*$""".r
-  // value must not itself be the next `Key:` token — an EMPTY value
-  // (`# Schema:  Last_errno: 0`, the normal shape when no default db is
-  // selected) must not swallow the following key as its value
-  private val MetricPair = """(\w+):[ \t]*(?!\w+:)(\S+)""".r
   // Percona rate-limit annotation, combined shape: `# Rate_limit: query:100`
   // (type:limit in one token — the generic pair scanner would mis-read it
   // as a bogus `query: 100` number metric, so it is cut out first). The
   // two-key shape `Log_slow_rate_type: query  Log_slow_rate_limit: 100`
   // is dispatched by key in the generic scanner, like `Schema:`.
   private val RateCombined = """\bRate_limit:[ \t]*(\w+):(\d+)""".r
+  // both case-insensitive with ASCII-only folding, so a line can match
+  // only when its first word is set (resp. use) in some ASCII case,
+  // followed by \s: see `leadsWith`
   private val SetTimestamp = """(?i)^\s*SET\s+timestamp\s*=\s*(\d+)\s*;?\s*$""".r
   private val UseDb = """(?i)^\s*use\s+`?([\w$]+)`?\s*;?\s*$""".r
-  private val IntVal = """[+-]?\d+""".r
-  private val FloatVal = """[+-]?\d*\.\d+(?:[eE][+-]?\d+)?""".r
 
   /** Parse a whole log text sequentially (reference semantics, incl. use-db
     * carry). Offsets are UTF-8 byte positions relative to `baseOffset`. */
@@ -93,9 +97,22 @@ object SlowLogParser {
       override def next(): (Long, String) = {
         val start = pos
         val startOff = off
+        // one pass finds the terminator and counts the line's UTF-8
+        // bytes: a high surrogate counts 4 with the char after it, unless
+        // that char ends the line
         var i = pos
-        while (i < text.length && text.charAt(i) != '\n' && text.charAt(i) != '\r')
+        var bytes = 0L
+        while (i < text.length && !isTerminator(text.charAt(i))) {
+          val c = text.charAt(i)
+          bytes += (if (c < 0x80) 1
+                    else if (c < 0x800) 2
+                    else if (Character.isHighSurrogate(c)) {
+                      if (i + 1 < text.length && !isTerminator(text.charAt(i + 1))) i += 1
+                      4
+                    }
+                    else 3)
           i += 1
+        }
         val line = text.substring(start, i)
         // consume the terminator: \r\n as one, else single \n or \r
         val termLen =
@@ -104,25 +121,12 @@ object SlowLogParser {
                    text.charAt(i + 1) == '\n') 2
           else 1
         pos = i + termLen
-        off = startOff + utf8Len(text, start, i) + termLen
+        off = startOff + bytes + termLen
         (startOff, line)
       }
     }
 
-  /** UTF-8 byte length of text[from, until) without allocating. */
-  private def utf8Len(s: String, from: Int, until: Int): Long = {
-    var i = from
-    var n = 0L
-    while (i < until) {
-      val c = s.charAt(i)
-      n += (if (c < 0x80) 1
-            else if (c < 0x800) 2
-            else if (Character.isHighSurrogate(c)) { i += 1; 4 }
-            else 3)
-      i += 1
-    }
-    n
-  }
+  private def isTerminator(c: Char): Boolean = c == '\n' || c == '\r'
 
   /**
    * Streaming parse of (byteOffset, line) pairs. The returned iterator is
@@ -203,10 +207,10 @@ object SlowLogParser {
         resetEvent(keepTs)
       }
 
-      private def handleHeaderish(off: Long, line: String): Unit = {
+      /** `body` is the line after its `#`, trimmed. */
+      private def handleHeaderish(off: Long, line: String, body: String): Unit = {
         seenHeader = true
         if (evOffset < 0) evOffset = off
-        val body = line.drop(1).trim // after '#'
         if (body.startsWith("administrator command:")) {
           admin = true
           var q = body
@@ -214,7 +218,12 @@ object SlowLogParser {
           query.clear(); query.append(q.trim)
           inQuery = true
         } else if (body.startsWith("Time:")) {
-          line match {
+          val v = body.drop(5).trim
+          // a canonical ISO value can never match OldTime (its 5th char
+          // is '-', OldTime's is a digit), so taking it first is exact
+          val iso = canonicalIsoTs(v)
+          if (iso != null) ts = iso
+          else line match {
             case OldTime(ymd, h, m, s, frac) =>
               val yy = ymd.substring(0, 2).toInt
               val year = if (yy < 70) 2000 + yy else 1900 + yy
@@ -223,18 +232,16 @@ object SlowLogParser {
                 if (frac == null) 0 else (frac.padTo(9, '0').take(9)).toInt)
               ts = Timestamp.from(ldt.toInstant(ZoneOffset.UTC))
             case _ =>
-              val v = body.drop(5).trim
               ts = parseIsoTs(v).orNull
           }
         } else if (body.startsWith("User@Host:")) {
-          line match {
-            case UserHost(u1, u2, h1, h2, id) =>
-              user = if (u1 != null && u1.nonEmpty) u1 else u2
-              host = if (h1 != null && h1.nonEmpty) h1 else h2
-              if (id != null)
-                try numM("Thread_id") = id.toLong
-                catch { case _: NumberFormatException => () }
-            case _ => ()
+          val g = accountGroups(line)
+          if (g != null) {
+            user = if (g(0).nonEmpty) g(0) else g(1)
+            host = if (g(2).nonEmpty) g(2) else g(3)
+            if (g(4) != null)
+              try numM("Thread_id") = g(4).toLong
+              catch { case _: NumberFormatException => () }
           }
         } else {
           // generic metrics line (toLong/toDouble guarded: a corrupt or
@@ -255,23 +262,26 @@ object SlowLogParser {
               line.substring(0, m.start) + line.substring(m.end)
             case None => line
           }
-          MetricPair.findAllMatchIn(scanLine).foreach { m =>
-            val k = m.group(1); val v = m.group(2)
-            if (k == "Schema") { if (v.nonEmpty) db = v }
-            else if (k == "Log_slow_rate_type") { if (v.nonEmpty) rateType = v }
+          // a value is never empty, so Schema and the rate type need
+          // no emptiness test
+          val m = new MetricScan(scanLine)
+          while (m.next()) {
+            val k = m.key
+            val vs = m.valueStart; val ve = m.valueEnd
+            if (k == "Schema") db = m.value
+            else if (k == "Log_slow_rate_type") rateType = m.value
             else if (k == "Log_slow_rate_limit") {
-              try rateLimit = v.toLong
+              try rateLimit = java.lang.Long.parseLong(scanLine, vs, ve, 10)
               catch { case _: NumberFormatException => () }
             }
-            else v match {
-              case "Yes" => boolM(k) = true
-              case "No" => boolM(k) = false
-              case IntVal() =>
-                try numM(k) = v.toLong catch { case _: NumberFormatException => () }
-              case FloatVal() =>
-                try timeM(k) = v.toDouble catch { case _: NumberFormatException => () }
-              case _ => ()
-            }
+            else if (ve - vs == 3 && scanLine.startsWith("Yes", vs)) boolM(k) = true
+            else if (ve - vs == 2 && scanLine.startsWith("No", vs)) boolM(k) = false
+            else if (integral(scanLine, vs, ve))
+              try numM(k) = java.lang.Long.parseLong(scanLine, vs, ve, 10)
+              catch { case _: NumberFormatException => () }
+            else if (decimal(scanLine, vs, ve))
+              try timeM(k) = m.value.toDouble
+              catch { case _: NumberFormatException => () }
           }
         }
       }
@@ -291,26 +301,25 @@ object SlowLogParser {
             // (two Time lines in a row = empty event, silently dropped).
             resetEvent(keepTs = false)
           }
-          handleHeaderish(off, line)
+          handleHeaderish(off, line, body)
         } else if (!seenHeader) {
           // mysqld startup banner / column captions before the first header
           ()
         } else {
-          line match {
-            case SetTimestamp(epoch) if !inQuery =>
-              if (evOffset < 0) evOffset = off
-              try ts = new Timestamp(epoch.toLong * 1000L)
-              catch { case _: NumberFormatException => () }
-            case UseDb(d) if !inQuery =>
-              if (evOffset < 0) evOffset = off
-              db = d; sessionDb = d
-            case _ =>
-              if (line.trim.nonEmpty || inQuery) {
-                if (evOffset < 0) evOffset = off
-                inQuery = true
-                if (query.nonEmpty) query.append('\n')
-                query.append(line)
-              }
+          val epoch = if (inQuery) null else setTimestampArg(line)
+          val use = if (inQuery || epoch != null) null else useDbArg(line)
+          if (epoch != null) {
+            if (evOffset < 0) evOffset = off
+            try ts = new Timestamp(epoch.toLong * 1000L)
+            catch { case _: NumberFormatException => () }
+          } else if (use != null) {
+            if (evOffset < 0) evOffset = off
+            db = use; sessionDb = use
+          } else if (line.trim.nonEmpty || inQuery) {
+            if (evOffset < 0) evOffset = off
+            inQuery = true
+            if (query.nonEmpty) query.append('\n')
+            query.append(line)
           }
         }
       }
@@ -408,24 +417,24 @@ object SlowLogParser {
           }
           if (scanLine.contains("Schema") ||
               scanLine.contains("Log_slow_rate")) {
-            MetricPair.findAllMatchIn(scanLine).foreach { m =>
-              val k = m.group(1); val v = m.group(2)
-              if (k == "Schema") { if (v.nonEmpty) db = v }
-              else if (k == "Log_slow_rate_type") {
-                if (v.nonEmpty) rateType = v
-              } else if (k == "Log_slow_rate_limit") {
-                try rateLimit = v.toLong
+            val m = new MetricScan(scanLine)
+            while (m.next()) {
+              val k = m.key
+              if (k == "Schema") db = m.value
+              else if (k == "Log_slow_rate_type") rateType = m.value
+              else if (k == "Log_slow_rate_limit") {
+                try rateLimit = java.lang.Long.parseLong(scanLine, m.valueStart, m.valueEnd, 10)
                 catch { case _: NumberFormatException => () }
               }
             }
           }
         }
       } else if (seenHeader) {
-        line match {
-          case SetTimestamp(_) if !inQuery => ()
-          case UseDb(d) if !inQuery => db = d; sessionDb = d
-          case _ =>
-            if (line.trim.nonEmpty || inQuery) { inQuery = true; hasQuery = true }
+        val isSetTs = !inQuery && setTimestampArg(line) != null
+        val use = if (inQuery || isSetTs) null else useDbArg(line)
+        if (use != null) { db = use; sessionDb = use }
+        else if (!isSetTs && (line.trim.nonEmpty || inQuery)) {
+          inQuery = true; hasQuery = true
         }
       }
     }
@@ -442,5 +451,289 @@ object SlowLogParser {
       .orElse(attempt(Timestamp.from(OffsetDateTime.parse(v).toInstant)))
       .orElse(attempt(Timestamp.from(
         LocalDateTime.parse(v, IsoLocal).toInstant(ZoneOffset.UTC))))
+  }
+
+  // -- hand scanners ---------------------------------------------------
+  // Each returns exactly what the regex it replaced returned (the regexes
+  // live on in SlowLogScannerSpec, which fuzzes every scanner against its
+  // own); they exist because those regexes cost a quarter of ingest CPU.
+
+  /** Left-to-right cursor over the `Key: value` pairs of a metric line.
+    * A key is a run of `\w` followed by `:`; its value is the run of
+    * non-`\s` chars after optional spaces/tabs, and the next search
+    * starts at the value's end. A value that itself starts with
+    * `word:` is the next key, not a value: an empty `# Schema:` must not
+    * swallow `Last_errno:`, and `Key: abc:def` yields `abc` = `def`. */
+  private[slowlog] final class MetricScan(s: String) {
+    var keyStart, keyEnd, valueStart, valueEnd = 0
+    private var pos = 0
+
+    def key: String = s.substring(keyStart, keyEnd)
+    def value: String = s.substring(valueStart, valueEnd)
+
+    /** Advance to the next pair; false when the line has no more. */
+    def next(): Boolean = {
+      val n = s.length
+      var i = pos
+      while (i < n) {
+        if (!Scan.isWord(s.charAt(i))) i += 1
+        else {
+          // a match can start anywhere in this run, but every start ends
+          // at the same `e`, so all of them succeed or fail together
+          val e = wordEnd(i)
+          if (e < n && s.charAt(e) == ':') {
+            var r = e + 1
+            while (r < n && (s.charAt(r) == ' ' || s.charAt(r) == '\t')) r += 1
+            if (r < n && !Scan.isSpace(s.charAt(r)) && !keyAt(r)) {
+              var ve = r + 1
+              while (ve < n && !Scan.isSpace(s.charAt(ve))) ve += 1
+              keyStart = i; keyEnd = e; valueStart = r; valueEnd = ve
+              pos = ve
+              return true
+            }
+          }
+          i = e
+        }
+      }
+      pos = n
+      false
+    }
+
+    private def wordEnd(i: Int): Int = {
+      var e = i
+      while (e < s.length && Scan.isWord(s.charAt(e))) e += 1
+      e
+    }
+
+    private def keyAt(i: Int): Boolean = {
+      val e = wordEnd(i)
+      e > i && e < s.length && s.charAt(e) == ':'
+    }
+  }
+
+  private def digitsEnd(s: String, i: Int, until: Int): Int = {
+    var j = i
+    while (j < until && Scan.isDigit(s.charAt(j))) j += 1
+    j
+  }
+
+  private def signEnd(s: String, i: Int, until: Int): Int =
+    if (i < until && (s.charAt(i) == '+' || s.charAt(i) == '-')) i + 1 else i
+
+  /** `s[from, until)` is an integer metric value: `[+-]?\d+`. */
+  private[slowlog] def integral(s: String, from: Int, until: Int): Boolean = {
+    val i = signEnd(s, from, until)
+    i < until && digitsEnd(s, i, until) == until
+  }
+
+  /** `s[from, until)` is a decimal metric value:
+    * `[+-]?\d*\.\d+` with an optional `[eE][+-]?\d+` exponent. */
+  private[slowlog] def decimal(s: String, from: Int, until: Int): Boolean = {
+    val dot = digitsEnd(s, signEnd(s, from, until), until)
+    if (dot >= until || s.charAt(dot) != '.') return false
+    val f = digitsEnd(s, dot + 1, until)
+    if (f == dot + 1) false
+    else if (f == until) true
+    else if (s.charAt(f) != 'e' && s.charAt(f) != 'E') false
+    else {
+      val x = signEnd(s, f + 1, until)
+      val e = digitsEnd(s, x, until)
+      e > x && e == until
+    }
+  }
+
+  /** The five fields of a `# User@Host: user[user] @ host [ip]  Id: N`
+    * line — user, bracketed user, host, bracketed IP, `Id` digits; the
+    * brackets and `Id` may be absent (null) — or null when the whole line
+    * does not fit that grammar (trailing junk after `Id: N` included).
+    * Ambiguous lines resolve as a backtracking matcher trying the longest
+    * user token, then the longest host token, first would: `u@h` is user
+    * `u`, host `h`. */
+  private[slowlog] def accountGroups(line: String): Array[String] = {
+    val n = line.length
+    if (n == 0 || line.charAt(0) != '#') return null
+    val u = Scan.skipSpace(line, 1)
+    if (u == 1 || !line.startsWith("User@Host:", u)) return null
+    val tail = new IdTail(line)
+    val a = Scan.skipSpace(line, u + "User@Host:".length)
+    var userEnd = a
+    while (userEnd < n && !Scan.isSpace(line.charAt(userEnd)) &&
+           line.charAt(userEnd) != '[') userEnd += 1
+    var g: Array[String] = null
+    if (userEnd < n && line.charAt(userEnd) == '[') {
+      val close = line.indexOf(']', userEnd + 1)
+      if (close >= 0) {
+        g = afterUser(line, close + 1, tail)
+        if (g != null) g(1) = line.substring(userEnd + 1, close)
+      }
+    }
+    if (g == null) g = afterUser(line, userEnd, tail)
+    // a shorter user token must be followed by `@` directly
+    while (g == null && userEnd > a) {
+      userEnd = line.lastIndexOf('@', userEnd - 1)
+      if (userEnd < a) return null
+      g = afterUser(line, userEnd, tail)
+    }
+    if (g != null) g(0) = line.substring(a, userEnd)
+    g
+  }
+
+  /** Fields 3–5 of [[accountGroups]] for a line whose user part ends at
+    * `from`, or null. */
+  private def afterUser(line: String, from: Int, tail: IdTail): Array[String] = {
+    val n = line.length
+    val at = Scan.skipSpace(line, from)
+    if (at >= n || line.charAt(at) != '@') return null
+    val h = Scan.skipSpace(line, at + 1)
+    var hostEnd = h
+    while (hostEnd < n && !Scan.isSpace(line.charAt(hostEnd)) &&
+           line.charAt(hostEnd) != '[') hostEnd += 1
+    val g = new Array[String](5)
+    val b = Scan.skipSpace(line, hostEnd)
+    if (b < n && line.charAt(b) == '[') {
+      val close = line.indexOf(']', b + 1)
+      if (close >= 0 && tail.accepts(close + 1)) {
+        g(2) = line.substring(h, hostEnd)
+        g(3) = line.substring(b + 1, close)
+        g(4) = tail.id(close + 1)
+        return g
+      }
+    }
+    if (tail.accepts(b)) {
+      g(2) = line.substring(h, hostEnd)
+      g(4) = tail.id(b)
+      return g
+    }
+    // a shorter host token is followed by neither spaces nor a bracket,
+    // so only an `Id:` tail can accept; the longest such token ends at
+    // the `Id:` itself or one code point short of the full token
+    if (hostEnd > h && tail.idAt >= 0) {
+      val end =
+        if (tail.idAt < hostEnd) tail.idAt
+        else hostEnd - Character.charCount(Character.codePointBefore(line, hostEnd))
+      if (end >= h && tail.idFrom(end)) {
+        g(2) = line.substring(h, end)
+        g(4) = tail.digits
+        return g
+      }
+    }
+    null
+  }
+
+  /** What may follow the host part of a User@Host line: only `\s` to
+    * the end, or anything without a line break up to an `Id: N` (a
+    * word-boundary `Id:`, `\s`, digits, `\s`) that ends the line. Such an
+    * `Id:` can start at one index only, found once per line from the end. */
+  private final class IdTail(line: String) {
+    /** Start of the line's trailing `\s` run. */
+    private val spaceFrom: Int = {
+      var i = line.length
+      while (i > 0 && Scan.isSpace(line.charAt(i - 1))) i -= 1
+      i
+    }
+    private val digitsFrom: Int = {
+      var i = spaceFrom
+      while (i > 0 && Scan.isDigit(line.charAt(i - 1))) i -= 1
+      i
+    }
+    /** Index of the closing `Id:`, or -1. */
+    val idAt: Int =
+      if (digitsFrom == spaceFrom) -1
+      else {
+        var i = digitsFrom
+        while (i > 0 && Scan.isSpace(line.charAt(i - 1))) i -= 1
+        if (i >= 3 && line.startsWith("Id:", i - 3) && !Scan.wordBefore(line, i - 3)) i - 3
+        else -1
+      }
+    /** Last line terminator (which `.` does not match) before `idAt`. */
+    private val lastBreak: Int = {
+      var i = idAt - 1
+      while (i >= 0 && !isLineBreak(line.charAt(i))) i -= 1
+      i
+    }
+    def digits: String = line.substring(digitsFrom, spaceFrom)
+    /** The `Id:` tail is reachable from index `x`. */
+    def idFrom(x: Int): Boolean = idAt >= 0 && x <= idAt && lastBreak < x
+    def accepts(x: Int): Boolean = idFrom(x) || x >= spaceFrom
+    /** The `Id` digits when the tail from `x` includes them, else null. */
+    def id(x: Int): String = if (idFrom(x)) digits else null
+  }
+
+  private def isLineBreak(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  /** The first non-`\s` chars of `line` are `word` (lower-case ASCII
+    * letters) in any ASCII case, followed by `\s`. */
+  private def leadsWith(line: String, word: String): Boolean = {
+    val i = Scan.skipSpace(line, 0)
+    val end = i + word.length
+    end < line.length && Scan.isSpace(line.charAt(end)) && {
+      var k = 0
+      while (k < word.length && (line.charAt(i + k) | 0x20) == word.charAt(k)) k += 1
+      k == word.length
+    }
+  }
+
+  private def group1(r: scala.util.matching.Regex, line: String): String = {
+    val m = r.pattern.matcher(line)
+    if (m.matches()) m.group(1) else null
+  }
+
+  /** The epoch of a `SET timestamp=N` line, or null. */
+  private[slowlog] def setTimestampArg(line: String): String =
+    if (leadsWith(line, "set")) group1(SetTimestamp, line) else null
+
+  /** The database of a `use db` line, or null. */
+  private[slowlog] def useDbArg(line: String): String =
+    if (leadsWith(line, "use")) group1(UseDb, line) else null
+
+  /** A `# Time:` value in the canonical `yyyy-MM-ddTHH:mm:ss[.f]Z` shape
+    * (1–9 fraction digits, upper-case `T` and `Z`, a valid date and time
+    * of day), as the timestamp `Instant.parse` gives it; null for any
+    * other text, which [[parseIsoTs]] then reads. */
+  private[slowlog] def canonicalIsoTs(v: String): Timestamp = {
+    val n = v.length
+    if (n != 20 && (n < 22 || n > 30 || v.charAt(19) != '.')) return null
+    if (v.charAt(4) != '-' || v.charAt(7) != '-' || v.charAt(10) != 'T' ||
+        v.charAt(13) != ':' || v.charAt(16) != ':' || v.charAt(n - 1) != 'Z') return null
+    val year = number(v, 0, 4); val month = number(v, 5, 7); val day = number(v, 8, 10)
+    val hour = number(v, 11, 13); val min = number(v, 14, 16); val sec = number(v, 17, 19)
+    val frac = if (n == 20) 0 else number(v, 20, n - 1)
+    if (year < 0 || month < 1 || month > 12 || day < 1 || day > monthLength(year, month) ||
+        hour < 0 || hour > 23 || min < 0 || min > 59 || sec < 0 || sec > 59 || frac < 0)
+      return null
+    var nanos = frac
+    var digits = n - 21
+    while (digits < 9) { nanos *= 10; digits += 1 }
+    Timestamp.from(Instant.ofEpochSecond(
+      epochDay(year, month, day) * 86400L + hour * 3600 + min * 60 + sec, nanos))
+  }
+
+  /** The decimal number `v[from, until)`, or -1 if a char is not a digit. */
+  private def number(v: String, from: Int, until: Int): Int = {
+    var x = 0
+    var i = from
+    while (i < until) {
+      val c = v.charAt(i)
+      if (!Scan.isDigit(c)) return -1
+      x = x * 10 + (c - '0')
+      i += 1
+    }
+    x
+  }
+
+  private def monthLength(year: Int, month: Int): Int = month match {
+    case 2 => if ((year % 4 == 0 && year % 100 != 0) || year % 400 == 0) 29 else 28
+    case 4 | 6 | 9 | 11 => 30
+    case _ => 31
+  }
+
+  /** Days since 1970-01-01 of a proleptic Gregorian date, year >= 0. */
+  private def epochDay(year: Int, month: Int, day: Int): Long = {
+    val y = if (month <= 2) year - 1 else year
+    val era = (if (y >= 0) y else y - 399) / 400
+    val yoe = y - era * 400
+    val doy = (153 * (if (month > 2) month - 3 else month + 9) + 2) / 5 + day - 1
+    era * 146097L + yoe * 365 + yoe / 4 - yoe / 100 + doy - 719468
   }
 }

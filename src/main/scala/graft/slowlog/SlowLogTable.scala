@@ -2,6 +2,7 @@ package graft.slowlog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Projection of parsed events onto the wide `queries` table (SURVEY.md
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
  * defaults).
  *
  * The fingerprint is the codegen'd `FingerprintExpr` ([[fingerprintCol]]);
- * `fingerprintUdf` wraps the same pure, regex-free `String => String` as a
+ * `fingerprintUdf` wraps the same pure `String => String` as a
  * Scala UDF and stays as the parity reference (SURVEY.md §7 decision
  * ledger). The digest is pure built-ins (`upper(substring(md5(fp), 17,
  * 16))` — the last 16 hex chars, pt make_checksum semantics) and stays
@@ -35,6 +36,20 @@ object SlowLogTable {
   val BoolKeys: Seq[String] = Seq(
     "QC_hit", "Full_scan", "Full_join", "Tmp_table", "Tmp_table_on_disk",
     "Filesort", "Filesort_on_disk")
+
+  /** Column names and types of the wide table [[flatten]] produces, in
+    * order. Declared, not inferred, so readers of a stored wide table
+    * need no data file to know it: the warehouse of a log without events
+    * holds none. */
+  val WideSchema: StructType = StructType(
+    Seq("digest", "fingerprint", "query", "db", "user", "host")
+      .map(StructField(_, StringType)) ++
+    Seq(StructField("ts", TimestampType), StructField("admin", BooleanType),
+      StructField("offset", LongType), StructField("rate_type", StringType),
+      StructField("rate_limit", LongType)) ++
+    TimeKeys.map(k => StructField(k.toLowerCase, DoubleType)) ++
+    NumberKeys.map(k => StructField(k.toLowerCase, LongType)) ++
+    BoolKeys.map(k => StructField(k.toLowerCase, BooleanType)))
 
   val fingerprintUdf = udf((q: String) => Fingerprint.fingerprint(q))
 

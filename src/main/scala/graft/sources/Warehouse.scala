@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** A side table stored beside a family's main table as
   * `<table><suffix>` ([[Warehouse.sideTable]]). An ADDITIVE side holds
@@ -213,9 +214,13 @@ object Warehouse {
       .partitionBy("q_date")
       .parquet(path)
 
-  /** Read back with partition pruning available on `q_date`. */
+  /** Read back with partition pruning available on `q_date`, under the
+    * declared wide schema: no footer-inference job, and a warehouse with
+    * no data files (a log without events) reads as an empty table. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read
+      .schema(graft.slowlog.SlowLogTable.WideSchema.add("q_date", DateType))
+      .parquet(path)
 
   /** Make `saveAsTable` idempotent ACROSS JVMs: an in-memory catalog
     * forgets managed tables at shutdown but their warehouse LOCATION

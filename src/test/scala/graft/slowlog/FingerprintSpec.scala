@@ -212,6 +212,33 @@ class FingerprintSpec extends AnyFunSuite {
     }
   }
 
+  /** Statements dense in the list, LIMIT and comment shapes the rewrite
+    * passes handle, with word-boundary hazards (non-ASCII letters, a
+    * combining mark, `_`) and every whitespace kind next to them. */
+  private val listSqlGen: Gen[String] = {
+    val lead = Gen.oneOf("", "x", "é", "_", "\u0301", "`", "(", " ", "1", "ß")
+    val kw = Gen.oneOf("in", "IN", "values", "VALUE", "limit", "LIMIT", "offset",
+      "join", "min", "order by a asc", "call p(1)")
+    val item = Gen.oneOf("1", "'s'", "?", "-2.5", "NULL", "a", "0x1F", "(1, 2)")
+    val ws = Gen.oneOf("", " ", "\t", "\n", "\u000B", "  ")
+    val piece = for {
+      l <- lead; k <- kw; w1 <- ws; n <- Gen.choose(0, 4)
+      items <- Gen.listOfN(n, item); w2 <- ws; close <- Gen.oneOf(")", "", ") ,(2)")
+    } yield s"$l$k$w1(${items.mkString("," + w2)}$close"
+    val other = Gen.oneOf("select a from t where b", "insert into t", "/*c.d:1/2*/",
+      "/* x */", "`in (1)`", "limit 5, 6", "limit 1 offset 2", ";", "# c\n")
+    Gen.listOf(Gen.frequency(3 -> piece, 1 -> other)).map(_.mkString(" "))
+  }
+
+  test("pinned: fingerprints of a generated statement corpus hash to the golden") {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (samples(sqlGen, 2000) ++ samples(listSqlGen, 5000)).foreach { q =>
+      md.update((q + "\u0001" + fp(q) + "\n").getBytes("UTF-8"))
+    }
+    assert(md.digest().map(b => f"$b%02x").mkString ==
+      "b560f74c68868fe914ee9bf9fb7933f64190d747d5d0e82239bb610e2ccd30d3")
+  }
+
   test("property: digest is 16 uppercase hex chars and deterministic") {
     samples(Gen.asciiPrintableStr, 200).foreach { s =>
       val d = digestId(s)

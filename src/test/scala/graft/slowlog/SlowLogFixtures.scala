@@ -30,4 +30,40 @@ object SlowLogFixtures {
       |SET timestamp=1705312803;
       |# administrator command: Quit;
       |""".stripMargin
+
+  /** Header, metric and statement shapes at the edge of the parser's
+    * grammar, one small log each: every `# Time:` spelling (canonical,
+    * offset, zone-less, old, leap second, 24:00, empty fraction, lowercase
+    * z, invalid date, over-long fraction), `User@Host` without `Id`,
+    * with trailing junk or an overflowing `Id`, empty `Schema:`,
+    * `Key: abc:def` values, signed and exponent numbers, mixed-case
+    * `SET timestamp`/`USE` with backticks (also inside a statement),
+    * tabs, vertical tabs and non-ASCII text. */
+  val edgeLogs: Seq[String] = Seq(
+    """# Time: 2024-01-15T10:00:01Z
+      |# User@Host: a[a] @ h [1.2.3.4]
+      |# Query_time: +1.5e3  Lock_time: -.5 Rows_sent: +7  Rows_examined: -0
+      |# Thread_id: 99999999999999999999  Killed: 1.  Last_errno: 0x10
+      |SELECT 1;
+      |# Time: 2024-01-15T12:00:01.5+02:00
+      |# User@Host: b @ host2 []  Id: 7 trailing
+      |# Schema:  Last_errno: 3  Killed: 0
+      |# Note: abc:def  QC_hit: Yes  Full_scan: no  Bogus: :x  Colon:
+      |sELECT 2;
+      |# Time: 240115 9:05:07.25
+      |# User@Host: [c] @ [10.0.0.1]  Id: 99999999999999999999
+      |Set TIMESTAMP = 1705312900 ;
+      |USE `db_1$`;
+      |select 3
+      |use inner_db;
+      |SET timestamp=1;
+      |""".stripMargin,
+    "# Time: 2024-01-15T23:59:60Z\n# User@Host: u[u] @ h []\tId:\t5\t\nSELECT 4;\n" +
+      "# Time: 2024-01-15T24:00:00Z\n# User@Host:u@h\n  use   `x`  \nSELECT 5;\n" +
+      "# Time: 2024-01-15T10:00:01.Z\n#\tUser@Host: u[u] @ h []  Id: 6\u000B\nSELECT 6;\n" +
+      "# Time: 2024-01-15t10:00:01z\n# User@Host: u[u] @ h [] xId: 8\n# Query_time:\u000B1.0  Lock_time:\t2\nSELECT 7;\n" +
+      "# Time: 2024-02-30T10:00:01Z\n# User@Host: üser[ü] @ höst []  Id: 9\nSELECT 'é';\n" +
+      "# Time: 2024-01-15T10:00:01.1234567891Z\n# User@Host: u[u] @ h [] éId: 10\nSELECT 8;\n" +
+      "# Time: 2000-02-29T00:00:00.000001Z\n# User@Host: u[u] @ h [] _Id: 11\nsEt tImEsTaMp=12;\nSELECT 9;\n"
+  )
 }

@@ -392,6 +392,47 @@ class SlowLogParserSpec extends AnyFunSuite {
     }
   }
 
+  // -- pinned output ---------------------------------------------------
+
+  /** One event as a stable line: every field, metric maps in key order,
+    * the timestamp as epoch millis + nanos (zone-independent). */
+  private def canonical(e: SlowLogEvent): String = {
+    def sorted[V](m: Map[String, V]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
+    val ts = if (e.ts == null) "null" else s"${e.ts.getTime}/${e.ts.getNanos}"
+    Seq(e.offset, ts, e.admin, e.query, e.user, e.host, e.db, e.rateType,
+      e.rateLimit, sorted(e.timeMetrics), sorted(e.numberMetrics),
+      sorted(e.boolMetrics)).mkString("\u0001")
+  }
+
+  private def sha256(lines: Iterator[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  test("pinned: parser output and carry hand-offs hash to their goldens") {
+    val fixtures = Seq(slow001, slow001.replace("\n", "\r\n"),
+      slow001.replace("\n", "\r")) ++ SlowLogFixtures.edgeLogs
+    val generated = generatedLogs()
+    def events(logs: Seq[String]): Seq[String] =
+      logs.flatMap(l => SlowLogParser.parseString(l).map(canonical) :+ "--")
+    // the carry each record hands the next, threaded per record split
+    val carries = (fixtures ++ generated).flatMap { log =>
+      recordSplit(log).scanLeft(SlowLogParser.SessionCarry.empty) {
+        case (c, (_, rec)) => SlowLogParser.scanCarry(rec, c)
+      }.map(_.toString) :+ "--"
+    }
+    val got = Seq(
+      sha256(events(fixtures).iterator), sha256(events(generated).iterator),
+      sha256(carries.iterator))
+    val want = Seq(
+      "87617f60ab7a611cd2d0b08bff41f04e1664ef5f1018301999b07f94cd527fff",
+      "53b667a1aa85623d70bef1761dd8906eda472f5041f29cda0d2e4eb5c4e7bafe",
+      "65d502fa937eaaebdb9113e9755e741b8351804a896f7ccd7515b367f3133004")
+    assert(got == want)
+  }
+
   /** Deterministic generated slow-log corpus shared by the re-chunking
     * and carry-scan properties. */
   private def generatedLogs(count: Int = 250): Seq[String] = {
@@ -402,36 +443,53 @@ class SlowLogParserSpec extends AnyFunSuite {
     val eventGen: Gen[(Boolean, String)] = for {
       shareTime <- Gen.frequency(3 -> false, 1 -> true)
       user <- Gen.oneOf("app", "root", "etl")
+      withId <- Gen.frequency(3 -> true, 1 -> false)
       useDb <- Gen.option(Gen.oneOf("db1", "db2"))
-      schema <- Gen.option(Gen.oneOf("sch1", "sch2"))
+      useShape <- Gen.oneOf("use %s;", "USE `%s`;", "Use `%s`", "  uSe %s ;")
+      // "" is the empty `Schema:` of a session with no default db
+      schema <- Gen.option(Gen.oneOf("sch1", "sch2", ""))
       setTs <- Gen.oneOf(true, false)
+      setShape <- Gen.oneOf("SET timestamp=%d;", "set TIMESTAMP = %d ;", "Set timestamp=%d")
       extended <- Gen.oneOf(true, false)
+      stmt <- Gen.oneOf("select", "in", "values")
       tbl <- word
       lines <- Gen.choose(1, 3)
       k <- Gen.choose(0, 999)
     } yield {
       val sb = new StringBuilder
-      sb.append(s"# User@Host: $user[$user] @ h${k % 7} [10.0.0.${k % 9}]  Id: ${k % 50}\n")
+      val id = if (withId) s"  Id: ${k % 50}" else ""
+      sb.append(s"# User@Host: $user[$user] @ h${k % 7} [10.0.0.${k % 9}]$id\n")
       sb.append(f"# Query_time: 0.${k}%06d  Lock_time: 0.000001 Rows_sent: ${k % 9}%d  Rows_examined: $k%d\n")
       if (extended)
         sb.append(s"# Thread_id: ${k % 50}${schema.map(s => s"  Schema: $s").getOrElse("")}  QC_hit: No\n")
-      useDb.foreach(d => sb.append(s"use $d;\n"))
-      if (setTs) sb.append(s"SET timestamp=${1705312800L + k};\n")
-      val q = (0 until lines).map(l => s"SELECT c$l FROM $tbl WHERE k = $k")
-        .mkString(" AND x IN (1,\n")
+      useDb.foreach(d => sb.append(useShape.format(d) + "\n"))
+      if (setTs) sb.append(setShape.format(1705312800L + k) + "\n")
+      val list = (0 to k % 6).map(v => s"${v * k}").mkString(", ")
+      val q = stmt match {
+        case "select" => (0 until lines).map(l => s"SELECT c$l FROM $tbl WHERE k = $k")
+          .mkString(" AND x IN (1,\n")
+        case "in" => s"SELECT a FROM $tbl WHERE b IN ($list)\n  AND c in(?, ?)"
+        case _ => s"INSERT INTO $tbl (a) VALUES ($list),\n ($k)"
+      }
       sb.append(q + ";\n")
       (shareTime, sb.result())
     }
+    val timeGen: Gen[Int => String] = Gen.oneOf(
+      (s: Int) => f"2024-01-15T10:00:$s%02d.000000Z",
+      (s: Int) => f"2024-01-15T12:00:$s%02d.25+02:00",
+      (s: Int) => f"2024-01-15T10:00:$s%02d",
+      (s: Int) => f"240115 10:00:$s%02d")
     val logGen: Gen[String] = for {
       n <- Gen.choose(1, 25)
       evs <- Gen.listOfN(n, eventGen)
       secs <- Gen.listOfN(n, Gen.choose(0, 59))
+      times <- Gen.listOfN(n, timeGen)
     } yield {
       val sb = new StringBuilder
-      evs.zip(secs).zipWithIndex.foreach { case (((share, body), sec), i) =>
-        if (i == 0 || !share)
-          sb.append(f"# Time: 2024-01-15T10:00:$sec%02d.000000Z\n")
-        sb.append(body)
+      evs.zip(secs).zip(times).zipWithIndex.foreach {
+        case ((((share, body), sec), time), i) =>
+          if (i == 0 || !share) sb.append(s"# Time: ${time(sec)}\n")
+          sb.append(body)
       }
       sb.result()
     }

@@ -30,6 +30,28 @@ class ReportSpec extends AnyFunSuite with SparkTestSession {
     intercept[IllegalArgumentException](Report.parseArgs(Array.empty))
   }
 
+  test("parseArgs: a bad number names its flag") {
+    for (flag <- Seq("-top", "-apdexT", "-threshold")) {
+      val e = intercept[IllegalArgumentException](
+        Report.parseArgs(Array("-source", "x", flag, "x")))
+      assert(e.getMessage.contains(flag) && e.getMessage.contains("'x'"), e.getMessage)
+    }
+  }
+
+  test("a warehouse of a log without events reports an empty profile") {
+    val dir = Files.createTempDirectory("graft-report-empty")
+    Files.writeString(dir.resolve("banner.log"),
+      "/usr/sbin/mysqld, Version: 8.0.36 (MySQL Community Server - GPL). started with:\n" +
+      "Tcp port: 3306  Unix socket: /var/run/mysqld/mysqld.sock\n" +
+      "Time                 Id Command    Argument\n")
+    val out = dir.resolve("warehouse").toString
+    Ingest.run(spark, Ingest.parseArgs(Array(
+      "-slowLogPath", dir.toString, "-dsn", s"parquet:$out")))
+    val rows = Report.run(spark, Report.Config(source = s"parquet:$out",
+      report = "profile")).collect()
+    assert(rows.isEmpty)
+  }
+
   test("pareto report: head covers the threshold, crossing digest included") {
     val rows = Report.run(spark, Report.Config(source = warehouse,
       report = "pareto", threshold = 0.5)).collect()

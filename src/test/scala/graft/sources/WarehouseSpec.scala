@@ -36,6 +36,21 @@ class WarehouseSpec extends AnyFunSuite with SparkTestSession {
       s"AQE did not coalesce the shuffle:\n$plan")
   }
 
+  private def namesAndTypes(s: org.apache.spark.sql.types.StructType) =
+    s.fields.toSeq.map(f => (f.name, f.dataType))
+
+  test("declared wide schema: flatten's output and what parquet infers on a warehouse") {
+    assert(namesAndTypes(wide.schema) == namesAndTypes(SlowLogTable.WideSchema))
+    val dir = Files.createTempDirectory("graft-wh-schema")
+    Files.writeString(dir.resolve("slow001.log"), graft.slowlog.SlowLogFixtures.slow001)
+    val out = dir.resolve("warehouse").toString
+    graft.Ingest.run(spark, graft.Ingest.parseArgs(Array(
+      "-slowLogPath", dir.toString, "-dsn", s"parquet:$out")))
+    val declared = SlowLogTable.WideSchema.add("q_date", "date")
+    assert(namesAndTypes(spark.read.parquet(out).schema) == namesAndTypes(declared))
+    assert(namesAndTypes(Warehouse.read(spark, out).schema) == namesAndTypes(declared))
+  }
+
   test("date-partitioned layout prunes partitions for time-ranged reads") {
     val out = Files.createTempDirectory("graft-wh-out").toString + "/queries"
     Warehouse.writePartitioned(wide, out)
